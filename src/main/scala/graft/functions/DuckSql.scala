@@ -16,8 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     DuckDB's inside-the-call `f(expr IGNORE NULLS)` → standard
   *     `f(expr) IGNORE NULLS`, the 1-based inclusive list slice
   *     `xs[lo:hi]` → `slice(xs, lo, greatest(hi-lo+1, 0))` and 1-based
-  *     indexing `xs[i]` → `try_element_at(xs, nullif(CAST(i AS INT), 0))`
-  *     (identifier OR call/paren receivers, string subscripts = map keys),
+  *     indexing `xs[i]` →
+  *     `try_element_at(xs, if(CAST(i AS INT) = 0, NULL, CAST(i AS INT)))`
+  *     (identifier OR call/paren receivers, string subscripts = map keys;
+  *     not `nullif`: Spark 4's `With` → common-expression Project → a
+  *     constraint set that grows 2^k for k subscripts),
   *     `HUGEINT` → `DECIMAL(38,0)` (exact 128-bit-safe arithmetic — every
   *     kernel-replay intermediate stays under 2^96 < 10^38, `xor` aliased,
   *     `//`→DIV accepts decimals), and bare decimal literals `1.0` →
@@ -143,10 +146,10 @@ object DuckSql {
           bracketEnd(s, i).exists(e => !s.substring(i + 1, e - 1).contains(':'))) {
         // DuckDB 1-based list indexing `xs[i]` (NULL out of range, and
         // NULL at the computed-to-0 index) → `try_element_at(xs,
-        // nullif(CAST(i AS INT), 0))` — Spark's bare `xs[i]` is 0-based
-        // and would be a silent off-by-one; the inner expression is
-        // recursively rewritten (it may itself carry `//` or nested
-        // indexing). The receiver may be an identifier OR a call/paren
+        // if(CAST(i AS INT) = 0, NULL, CAST(i AS INT)))` — Spark's bare
+        // `xs[i]` is 0-based and would be a silent off-by-one; the inner
+        // expression is recursively rewritten (it may itself carry `//` or
+        // nested indexing). The receiver may be an identifier OR a call/paren
         // group (`split(s, ' ')[1]`, chained `xs[i][j]` — ADVICE r13); a
         // string-literal receiver throws loudly rather than falling
         // through to Spark's 0-based parse. A non-literal slice
@@ -165,12 +168,15 @@ object DuckSql {
         // (CAST('key' AS INT) is NULL under non-ANSI casts — ADVICE r13)
         if (lit.length >= 2 && lit.head == '\'' && skipString(lit, 0) == lit.length)
           out.append(s"try_element_at($recv, $lit)")
-        else
+        else {
           // the CAST matters: series subscripts arrive as BIGINT and
-          // Spark's element_at index parameter is INT-typed; the nullif
-          // makes a computed 0 subscript NULL like DuckDB (Spark throws)
-          out.append(s"try_element_at($recv, nullif(CAST(" +
-            s"${rewriteTokens(inner)} AS INT), 0))")
+          // Spark's element_at index parameter is INT-typed; the if()
+          // makes a computed 0 subscript NULL like DuckDB (Spark throws).
+          // Not nullif: Spark 4 lifts each nullif into a common-expression
+          // alias, and Project's constraint set doubles per alias (2^k)
+          val idx = s"CAST(${rewriteTokens(inner)} AS INT)"
+          out.append(s"try_element_at($recv, if($idx = 0, NULL, $idx))")
+        }
         i = end
       } else if (matchesWord(s, i, "HUGEINT")) {
         // DuckDB's 128-bit integer → DECIMAL(38,0): every kernel-replay

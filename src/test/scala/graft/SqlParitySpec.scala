@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Alias
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.util.control.NonFatal
 
 /** Cross-dialect parity: the oracle corpus is written in ANSI SQL so DuckDB
   * can replay it, which means the ANSI subset must ALSO run verbatim on
@@ -203,21 +206,23 @@ class SqlParitySpec extends AnyFunSuite {
     // 1-based indexing -> try_element_at (NULL out of range, like DuckDB);
     // the inner expression is recursively rewritten and cast to the INT
     // index type element_at expects (series subscripts arrive as BIGINT);
-    // nullif degrades a computed 0 subscript to NULL like DuckDB
+    // the if() guard degrades a computed 0 subscript to NULL like DuckDB
+    // (spelled without nullif — see the common-expression plan test below)
     assert(rewriteTokens("ws[1]") ==
-      "try_element_at(ws, nullif(CAST(1 AS INT), 0))")
+      "try_element_at(ws, if(CAST(1 AS INT) = 0, NULL, CAST(1 AS INT)))")
     assert(rewriteTokens("ws[i + n // 2]") ==
-      "try_element_at(ws, nullif(CAST(i + n  DIV  2 AS INT), 0))")
+      "try_element_at(ws, if(CAST(i + n  DIV  2 AS INT) = 0, NULL, " +
+        "CAST(i + n  DIV  2 AS INT)))")
     assert(rewriteTokens("ws[a:b]") ==
       "slice(ws, a, greatest((b) - (a) + 1, 0))")
     // expression receivers (ADVICE r13): a call result and a chained
     // subscript both rewrite 1-based instead of falling through to
     // Spark's 0-based GetArrayItem
     assert(rewriteTokens("split(s, ' ')[1]") ==
-      "try_element_at(split(s, ' '), nullif(CAST(1 AS INT), 0))")
+      "try_element_at(split(s, ' '), if(CAST(1 AS INT) = 0, NULL, CAST(1 AS INT)))")
     assert(rewriteTokens("xs[i][j]") ==
-      "try_element_at(try_element_at(xs, nullif(CAST(i AS INT), 0)), " +
-        "nullif(CAST(j AS INT), 0))")
+      "try_element_at(try_element_at(xs, if(CAST(i AS INT) = 0, NULL, CAST(i AS INT))), " +
+        "if(CAST(j AS INT) = 0, NULL, CAST(j AS INT)))")
     // a string-literal subscript is map-key access — no INT cast
     assert(rewriteTokens("m['key']") == "try_element_at(m, 'key')")
     // HUGEINT lands on exact DECIMAL(38,0) arithmetic
@@ -264,6 +269,25 @@ class SqlParitySpec extends AnyFunSuite {
     // the standing rewrites still hold alongside the new ones
     assert(rewriteTokens("SELECT a // 2, CAST(x AS VARCHAR), CAST(y AS DOUBLE[])") ==
       "SELECT a  DIV  2, CAST(x AS STRING), CAST(y AS ARRAY<DOUBLE>)")
+  }
+
+  test("1-based subscripts plan without common-expression aliases (q_span_scrub_l20)") {
+    // Spark 4 builds nullif as a With common expression; each one becomes a
+    // `_common_expr_N` alias in one Project, and Project's constraint set
+    // doubles per alias — the 20-subscript span-scrub oracle then needs
+    // ~2^20 constraints on the driver. Checked on the plan, not on heap
+    // size, so a large-heap run still catches a regression.
+    val spark = TestSpark.spark
+    GraftSession.install(spark)
+    Tables.registerViews(spark, TestSpark.sf0001)
+    val plan = graft.functions.DuckSql
+      .sql(spark, SparkEntry.oracleSql("q_span_scrub_l20"))
+      .queryExecution.optimizedPlan
+    val common = plan.collectWithSubqueries { case p =>
+      p.expressions.flatMap(_.collect {
+        case a: Alias if a.name.startsWith("_common_expr_") => a.name })
+    }.flatten
+    assert(common.isEmpty, s"${common.size} common-expression aliases: ${common.take(5)}")
   }
 
   test("regexp_replace replacement: RE2→Java translation incl. \\<other>, lone backslash and non-literal rejection (ADVICE r14)") {
@@ -318,8 +342,14 @@ class SqlParitySpec extends AnyFunSuite {
             s"(sql=${viaSql.take(2)} df=${viaDf.take(2)})")
         else None
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           Some(s"$key: ${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
+        case fatal: Throwable =>
+          // an OutOfMemoryError leaves the shared TestSpark session unfit
+          // for later suites: rethrow (ScalaTest aborts the run) with the
+          // key attached instead of recording it as one more failure
+          fatal.addSuppressed(new RuntimeException(s"while replaying oracle key $key"))
+          throw fatal
       }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
