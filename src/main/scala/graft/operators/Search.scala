@@ -235,7 +235,6 @@ object Search {
         "doc_id")
       .select(col("term"), col("doc_id"), col("tf").cast("double").as("tf"),
         col("dl").cast("double").as("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dfT = posts.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
     val contrib = log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
       (col("tf") * (lit(1.2) + lit(1.0))) /
@@ -867,7 +866,6 @@ object Search {
         "doc_id")
       .select(col("term"), col("doc_id"), col("tf").cast("double").as("tf"),
         col("dl").cast("double").as("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dfT = posts.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
     val contrib = log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
       (col("tf") * (lit(1.2) + lit(1.0))) /

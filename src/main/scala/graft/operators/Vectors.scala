@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.functions.{CosineSimExpr, DotProductExpr, Hashing}
+import graft.sources.Sidecar
 
 /** Similarity search + near-dup operators over `embeddings` and `documents`
   * (north-star LLM-pipeline extension): brute-force cosine top-k, sampled
@@ -121,7 +123,7 @@ object Vectors {
     * family and the Θ(docs·deg·m) expansion collapses to the rare
     * small-family docs. Cosine families keep it false: a cross pair can
     * round to the self score (1.0) and win the id tiebreak. */
-  private[operators] def nearestMAssembly(
+  private[graft] def nearestMAssembly(
       memberRep: DataFrame,
       repPairs: DataFrame,
       selfScore: Double,
@@ -157,9 +159,11 @@ object Vectors {
     // CALLER CONTRACT: selfDominates = true requires a `cnt` column on
     // memberRep equal to the member count of the row's rep group.
     val probes =
-      if (selfDominates)
+      if (selfDominates) {
+        require(memberRep.columns.contains("cnt"), "nearestMAssembly: selfDominates = true " +
+          "needs memberRep.cnt, the member count of each rep group")
         memberRep.where(col("cnt") <= m).select(col("id"), col("rep"))
-      else members
+      } else members
     val cross = probes.join(crossCands, Seq("rep"))
       .select(col("id"), col("nbr"), col("score"))
     graft.plans.TopKPerGroup.topK(own.union(cross), Seq("id"),
@@ -725,10 +729,7 @@ object Vectors {
     val probeV = edf.where(col("vec_id") === 0)
       .select(col("v")).as[Array[Double]].head()
     val probeN = normA(probeV)
-    val probeClusters = (0 until k)
-      .map(c => (c, dotA(probeV, cents(c)) / (probeN * centNorms(c))))
-      .sortBy { case (c, sim) => (-sim, c) }
-      .take(4).map(_._1).toSet
+    val probeClusters = probedCells(cents, probeV, 4).toSet
     val bcC = spark.sparkContext.broadcast((cents, centNorms))
     val bcP = spark.sparkContext.broadcast((probeV, probeN, probeClusters))
     // single pass: assign to nearest centroid, keep only probed clusters,
@@ -749,6 +750,40 @@ object Vectors {
       .toDF("vec_id", "cos")
       .orderBy(col("cos").desc, col("vec_id")).limit(10)
       .select(col("vec_id"), round(col("cos"), 4).as("cos_r"))
+  }
+
+  /** The persisted IVF index layout ([[writeIvfIndex]], [[appendIvfIndex]]):
+    * (vec_id, v) rows under `cluster=` dirs. Readers pass it to
+    * `spark.read.schema`, so a query opens the index without an inference
+    * job. */
+  private[graft] val IvfSchema: StructType =
+    StructType.fromDDL("vec_id BIGINT, v ARRAY<DOUBLE>, cluster INT")
+
+  /** The coarse codebook sidecar (`_codebook`: cluster, centroid) of an
+    * IVF or IVFADC index. */
+  private def writeIvfCodebook(s: SparkSession, cents: Array[Array[Double]],
+      indexDir: String): Unit = {
+    import s.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cluster", "centroid")
+      .write.mode("overwrite").parquet(s"$indexDir/_codebook")
+  }
+
+  /** [[writeIvfCodebook]]'s sidecar, read on the driver
+    * ([[graft.sources.Sidecar]]); element c is cluster c's centroid. */
+  private[graft] def ivfCodebook(s: SparkSession, indexDir: String): Array[Array[Double]] =
+    Sidecar.rows(s, s"$indexDir/_codebook")
+      .map(r => (r.getInteger("cluster", 0), Sidecar.doubles(r, "centroid")))
+      .sortBy(_._1).map(_._2).toArray
+
+  /** The `n` cells whose centroids are most cosine-similar to `probe`
+    * (ties → lower cell id): the partitions an at-rest IVF query scans. */
+  private def probedCells(cents: Array[Array[Double]], probe: Array[Double],
+      n: Int): Seq[Int] = {
+    val pn = normA(probe)
+    cents.indices.map(c => (c, dotA(probe, cents(c)) / (pn * normA(cents(c)))))
+      .sortBy { case (c, sim) => (-sim, c) }
+      .take(n).map(_._1)
   }
 
   /** Build a PERSISTED IVF index — the at-rest form of [[annIvf]], and the
@@ -772,9 +807,7 @@ object Vectors {
     }
       .toDF("cluster", "vec_id", "v")
       .write.mode("overwrite").partitionBy("cluster").parquet(outDir)
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "centroid")
-      .write.mode("overwrite").parquet(s"$outDir/_codebook")
+    writeIvfCodebook(s, cents, outDir)
   }
 
   /** IVF member of the index-append trio
@@ -790,11 +823,8 @@ object Vectors {
     IndexLease.withLease(s, s"$indexDir/_lease") {
       val spark = s
       import spark.implicits._
-      val codebook = spark.read.parquet(s"$indexDir/_codebook")
-        .as[(Int, Seq[Double])].collect().sortBy(_._1)
-      val cents = codebook.map(_._2.toArray)
-      val centNorms = cents.map(normA)
-      val bc = spark.sparkContext.broadcast((cents, centNorms))
+      val cents = ivfCodebook(s, indexDir)
+      val bc = spark.sparkContext.broadcast((cents, cents.map(normA)))
       batch.select(col("vec_id"), vec.as("v")).as[(Long, Array[Double])]
         .map { case (id, v) =>
           val (cs, cn) = bc.value
@@ -812,19 +842,8 @@ object Vectors {
     * under a TakeOrdered top-k. */
   def queryIvfIndex(s: SparkSession, indexDir: String, probe: Array[Double],
       topK: Int = 10, nProbe: Int = 4, excludeId: Option[Long] = None): DataFrame = {
-    val spark = s
-    import spark.implicits._
-    val codebook = spark.read.parquet(s"$indexDir/_codebook")
-      .as[(Int, Seq[Double])].collect()
-    val pn = normA(probe)
-    val chosen = codebook
-      .map { case (c, cent) =>
-        val ca = cent.toArray
-        (c, dotA(probe, ca) / (pn * normA(ca)))
-      }
-      .sortBy { case (c, sim) => (-sim, c) }
-      .take(nProbe).map(_._1).toSeq
-    val scan = dropTombstoned(s, indexDir, spark.read.parquet(indexDir)
+    val chosen = probedCells(ivfCodebook(s, indexDir), probe, nProbe)
+    val scan = dropTombstoned(s, indexDir, s.read.schema(IvfSchema).parquet(indexDir)
       .where(col("cluster").isin(chosen: _*)), "vec_id")
     // "more like this" queries probe with an indexed vector — excludeId
     // drops it so topK means topK real neighbors, matching annIvf/cosineTopk
@@ -1479,6 +1498,31 @@ object Vectors {
     star.union(inter)
   }
 
+  /** The persisted PQ `codes` table layout ([[writePqIndex]],
+    * [[appendPqIndex]]): vec_id and its M byte codes. */
+  private[graft] val PqCodesSchema: StructType =
+    StructType.fromDDL("vec_id BIGINT, codes BINARY")
+
+  /** The PQ codebook sidecar (`_pq_codebook`: m, k, centroid) of a PQ or
+    * IVFADC index. */
+  private def writePqCodebook(s: SparkSession, cb: Array[Array[Array[Double]]],
+      indexDir: String): Unit = {
+    import s.implicits._
+    cb.zipWithIndex.flatMap { case (sub, m) =>
+      sub.zipWithIndex.map { case (cent, k) => (m, k, cent.toSeq) }
+    }.toSeq.toDF("m", "k", "centroid")
+      .write.mode("overwrite").parquet(s"$indexDir/_pq_codebook")
+  }
+
+  /** [[writePqCodebook]]'s sidecar, read on the driver
+    * ([[graft.sources.Sidecar]]) as cb(m)(k). */
+  private[graft] def pqCodebook(s: SparkSession, indexDir: String)
+      : Array[Array[Array[Double]]] = {
+    val rows = Sidecar.rows(s, s"$indexDir/_pq_codebook")
+      .map(r => (r.getInteger("m", 0), r.getInteger("k", 0), Sidecar.doubles(r, "centroid")))
+    Array.tabulate(PqM)(m => rows.filter(_._1 == m).sortBy(_._2).map(_._3).toArray)
+  }
+
   /** Build a PERSISTED PQ index: codes table (vec_id + M byte codes — the
     * 32×-compressed scan body) and a `_pq_codebook` sidecar (m, k,
     * centroid), optionally alongside the full vectors for exact refinement.
@@ -1494,10 +1538,7 @@ object Vectors {
       .map { case (id, v) => (id, pqEncode(bc.value, v).map(_.toByte)) }
       .toDF("vec_id", "codes")
       .write.mode("overwrite").parquet(s"$outDir/codes")
-    cb.zipWithIndex.flatMap { case (sub, m) =>
-      sub.zipWithIndex.map { case (cent, k) => (m, k, cent.toSeq) }
-    }.toSeq.toDF("m", "k", "centroid")
-      .write.mode("overwrite").parquet(s"$outDir/_pq_codebook")
+    writePqCodebook(s, cb, outDir)
   }
 
   /** PQ member of the index-append family: encode a batch against the
@@ -1507,12 +1548,7 @@ object Vectors {
     IndexLease.withLease(s, s"$indexDir/_lease") {
       val spark = s
       import spark.implicits._
-      val cbRows = spark.read.parquet(s"$indexDir/_pq_codebook")
-        .as[(Int, Int, Seq[Double])].collect()
-      val cb = Array.tabulate(PqM) { m =>
-        cbRows.filter(_._1 == m).sortBy(_._2).map(_._3.toArray)
-      }
-      val bc = spark.sparkContext.broadcast(cb)
+      val bc = spark.sparkContext.broadcast(pqCodebook(s, indexDir))
       batch.select(col("vec_id"), vec.as("v")).as[(Long, Array[Double])]
         .map { case (id, v) => (id, pqEncode(bc.value, v).map(_.toByte)) }
         .toDF("vec_id", "codes")
@@ -1531,15 +1567,10 @@ object Vectors {
     val effCand = if (cand > 0) cand else pqCandFor(embeddingsCount(s, d))
     val spark = s
     import spark.implicits._
-    val cbRows = spark.read.parquet(s"$indexDir/_pq_codebook")
-      .as[(Int, Int, Seq[Double])].collect()
-    val cb = Array.tabulate(PqM) { m =>
-      cbRows.filter(_._1 == m).sortBy(_._2).map(_._3.toArray)
-    }
-    val tables = adcTables(cb, probe)
+    val tables = adcTables(pqCodebook(s, indexDir), probe)
     val bcT = spark.sparkContext.broadcast(tables)
     val codes = dropTombstoned(s, indexDir,
-        spark.read.parquet(s"$indexDir/codes"), "vec_id")
+        spark.read.schema(PqCodesSchema).parquet(s"$indexDir/codes"), "vec_id")
       .as[(Long, Array[Byte])]
     val scored = excludeId.fold(codes)(id => codes.filter(_._1 != id))
       .map { case (id, cs) =>
@@ -1954,10 +1985,7 @@ object Vectors {
     val (cents, cn, cbR) = trainIvfPq(edf)
     val probeV = probeVector(s, d)
     val probeN = normA(probeV)
-    val probed = (0 until IvfPqCells)
-      .map(c => (c, dotA(probeV, cents(c)) / (probeN * cn(c))))
-      .sortBy { case (c, sim) => (-sim, c) }
-      .take(IvfPqProbe).map(_._1).toSet
+    val probed = probedCells(cents, probeV, IvfPqProbe).toSet
     val tables = adcTables(cbR, probeV)
     val cellConst = cents.map(c => dotA(probeV, c))
     val bc = spark.sparkContext.broadcast(
@@ -1996,6 +2024,12 @@ object Vectors {
       .select(col("vec_id"), round(col("cos"), 4).as("cos_r"))
   }
 
+  /** The persisted IVFADC index layout ([[writeIvfPqIndex]],
+    * [[appendIvfPqIndex]]): (vec_id, residual codes) rows under `cluster=`
+    * dirs. */
+  private[graft] val IvfPqSchema: StructType =
+    StructType.fromDDL("vec_id BIGINT, codes BINARY, cluster INT")
+
   /** Build a PERSISTED IVFADC index: hive-partitioned by coarse cell (the
     * partition-pruned scan body is vec_id + 8 residual-code bytes — both
     * index wins at once: read nProbe/k of the data AND 32× less of it),
@@ -2017,13 +2051,8 @@ object Vectors {
       }
       .toDF("cluster", "vec_id", "codes")
       .write.mode("overwrite").partitionBy("cluster").parquet(outDir)
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "centroid")
-      .write.mode("overwrite").parquet(s"$outDir/_codebook")
-    cbR.zipWithIndex.flatMap { case (sub, m) =>
-      sub.zipWithIndex.map { case (cent, k) => (m, k, cent.toSeq) }
-    }.toSeq.toDF("m", "k", "centroid")
-      .write.mode("overwrite").parquet(s"$outDir/_pq_codebook")
+    writeIvfCodebook(s, cents, outDir)
+    writePqCodebook(s, cbR, outDir)
   }
 
   /** IVFADC member of the index-append family: coarse-quantize against the
@@ -2034,15 +2063,8 @@ object Vectors {
     IndexLease.withLease(s, s"$indexDir/_lease") {
       val spark = s
       import spark.implicits._
-      val cents = spark.read.parquet(s"$indexDir/_codebook")
-        .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
-      val cn = cents.map(normA)
-      val cbRows = spark.read.parquet(s"$indexDir/_pq_codebook")
-        .as[(Int, Int, Seq[Double])].collect()
-      val cbR = Array.tabulate(PqM) { m =>
-        cbRows.filter(_._1 == m).sortBy(_._2).map(_._3.toArray)
-      }
-      val bc = spark.sparkContext.broadcast((cents, cn, cbR))
+      val cents = ivfCodebook(s, indexDir)
+      val bc = spark.sparkContext.broadcast((cents, cents.map(normA), pqCodebook(s, indexDir)))
       batch.select(col("vec_id"), vec.as("v")).as[(Long, Array[Double])]
         .map { case (id, v) =>
           val (cs, csn, cb) = bc.value
@@ -2065,22 +2087,12 @@ object Vectors {
       excludeId: Option[Long] = None): DataFrame = {
     val spark = s
     import spark.implicits._
-    val coarse = spark.read.parquet(s"$indexDir/_codebook")
-      .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
-    val cbRows = spark.read.parquet(s"$indexDir/_pq_codebook")
-      .as[(Int, Int, Seq[Double])].collect()
-    val cbR = Array.tabulate(PqM) { m =>
-      cbRows.filter(_._1 == m).sortBy(_._2).map(_._3.toArray)
-    }
-    val pn = normA(probe)
-    val chosen = coarse.indices
-      .map(c => (c, dotA(probe, coarse(c)) / (pn * normA(coarse(c)))))
-      .sortBy { case (c, sim) => (-sim, c) }
-      .take(IvfPqProbe).map(_._1)
-    val tables = adcTables(cbR, probe)
+    val coarse = ivfCodebook(s, indexDir)
+    val chosen = probedCells(coarse, probe, IvfPqProbe)
+    val tables = adcTables(pqCodebook(s, indexDir), probe)
     val cellConst = coarse.map(c => dotA(probe, c))
     val bcT = spark.sparkContext.broadcast((tables, cellConst))
-    val codes = dropTombstoned(s, indexDir, spark.read.parquet(indexDir)
+    val codes = dropTombstoned(s, indexDir, spark.read.schema(IvfPqSchema).parquet(indexDir)
         .where(col("cluster").isin(chosen: _*)), "vec_id")
       .select(col("vec_id"), col("codes"), col("cluster"))
       .as[(Long, Array[Byte], Int)]

@@ -104,6 +104,7 @@ case class TopKPerGroupExec(
     val sortOrder = ordering
     val limit = k
     val childOutput = child.output
+    val rankedOutput = output
     val emitRank = rankAttr.isDefined
     val maxGroups = if (emitRank) Int.MaxValue else maxGroupsInFlight
     child.execute().mapPartitions ({ iter =>
@@ -179,11 +180,14 @@ case class TopKPerGroupExec(
         }
         val joined = new JoinedRow
         val rankRow = new GenericInternalRow(1)
+        // emit UnsafeRows, like every other branch: a consumer without a
+        // projection of its own (a collect, an exchange) casts to UnsafeRow
+        val toRankedUnsafe = UnsafeProjection.create(rankedOutput, rankedOutput)
         heaps.valuesIterator.flatMap { heap =>
           val rows = heap.iterator().asScala.toArray.sorted(ord.on[UnsafeRow](identity))
           rows.iterator.zipWithIndex.map { case (row, i) =>
             rankRow.setLong(0, i + 1L)
-            joined(row, rankRow)
+            toRankedUnsafe(joined(row, rankRow))
           }
         }
       }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{Codec, SeisSample, SeriesEncodeStats}
 import graft.operators.RefOps
 
@@ -219,7 +220,32 @@ object SeisPipeline {
       .join(index, Seq("spec", "igll"))
       .select(col("gll"), col("force"), col("param"), col("step"), col("value"))
       .as[SeisSample]
-    val blobs = gathered.groupByKey(_.gll)
+    val written = sinkBlobs(spark, gathered, outDir, network, station, procIdx, bits)
+    writeDbMeta(spark, fixtureDir, outDir, dbType = "SGT", forder = "NEZ",
+      nGll = written, nForce = 3, nParas = 6, kind = "strain_field",
+      withGlobal = false, // DSGT.py:179-194 attrs (no nGLL_global for SGT)
+      bits = bits, dt = dt)
+    written
+  }
+
+  /** The blob table's layout, as [[sinkBlobs]] writes it: one row per GLL
+    * point, hive-partitioned by (network, station, proc). Readers pass it to
+    * `spark.read.schema`, so opening a database lists its files but runs no
+    * schema-inference job. */
+  val BlobSchema: StructType = StructType.fromDDL(
+    "gll BIGINT, n INT, offset DOUBLE, scale DOUBLE, payload BINARY, bits INT, " +
+      "payload_len INT, network STRING, station STRING, proc STRING")
+
+  private def readBlobs(spark: SparkSession, dbDir: String): DataFrame =
+    spark.read.schema(BlobSchema).parquet(dbDir)
+
+  /** Shared SGT/DGF sink: encode each point's gathered series into one blob
+    * row and write the [[BlobSchema]] layout to `outDir`. Returns the
+    * written row count. */
+  private def sinkBlobs(spark: SparkSession, gathered: Dataset[SeisSample], outDir: String,
+      network: String, station: String, procIdx: Int, bits: Int): Long = {
+    import spark.implicits._
+    gathered.groupByKey(_.gll)
       .agg(new graft.functions.SeriesEncoderAgg(bits).toColumn.name("enc"))
       .toDF("gll", "enc")
       .select(col("gll"), col("enc.n").as("n"), col("enc.offset").as("offset"),
@@ -228,15 +254,10 @@ object SeisPipeline {
         length(col("enc.payload")).as("payload_len"),
         lit(network).as("network"), lit(station).as("station"),
         lit(procName(procIdx)).as("proc"))
-    blobs.write.mode("overwrite")
+      .write.mode("overwrite")
       .partitionBy("network", "station", "proc")
       .parquet(outDir)
-    val written = spark.read.parquet(outDir).count()
-    writeDbMeta(spark, fixtureDir, outDir, dbType = "SGT", forder = "NEZ",
-      nGll = written, nForce = 3, nParas = 6, kind = "strain_field",
-      withGlobal = false, // DSGT.py:179-194 attrs (no nGLL_global for SGT)
-      bits = bits, dt = dt)
-    written
+    readBlobs(spark, outDir).count()
   }
 
   /** Header-attr sidecar — the reference's HDF5 header attrs
@@ -274,14 +295,14 @@ object SeisPipeline {
       nForce: Long, nParas: Long, nSpec: Long, nGllGlobal: Long,
       bits: Long, dt: Double, step0: Long, dstep: Long, version: String)
 
+  /** Read on the driver ([[Sidecar]]): no Spark job. */
   def readDbMeta(spark: SparkSession, dbDir: String): DbMeta = {
-    val r = spark.read.parquet(dbDir + "/_meta").head()
-    DbMeta(r.getAs[String]("db_type"), r.getAs[String]("forder"),
-      r.getAs[Long]("ngll"), r.getAs[Long]("nstep"), r.getAs[Long]("nforce"),
-      r.getAs[Long]("nparas"), r.getAs[Long]("nspec"),
-      r.getAs[Long]("ngll_global"), r.getAs[Long]("bits"),
-      r.getAs[Double]("dt"), r.getAs[Long]("step0"), r.getAs[Long]("dstep"),
-      r.getAs[String]("version"))
+    val r = Sidecar.rows(spark, dbDir + "/_meta").head
+    def long(f: String) = r.getLong(f, 0)
+    DbMeta(r.getString("db_type", 0), r.getString("forder", 0),
+      long("ngll"), long("nstep"), long("nforce"), long("nparas"), long("nspec"),
+      long("ngll_global"), long("bits"), r.getDouble("dt", 0), long("step0"),
+      long("dstep"), r.getString("version", 0))
   }
 
   /** R24 as a first-class consumer API: read a built database back to long
@@ -293,7 +314,10 @@ object SeisPipeline {
     * reference's reason for storing `dt` at all. For an SGT db major=force,
     * minor=param; for a DGF db major=comp, minor=force (`DDGF.py:128-132`).
     * Scale shape: one task per blob row group, no shuffle — decode is a
-    * scan-parallel map. */
+    * scan-parallel map. Building the DataFrame runs no Spark job: `_meta`
+    * is read on the driver ([[readDbMeta]]) and the blob table opens with
+    * its declared [[BlobSchema]], so the only work before the query plans
+    * is the file listing. */
   def readSeisDb(spark: SparkSession, dbDir: String,
       where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import spark.implicits._
@@ -304,7 +328,7 @@ object SeisPipeline {
       if (meta.dbType == "DGF") meta.nForce.toInt else meta.nParas.toInt
     val nStep = meta.nStep.toInt
     val (step0, dstep, dt) = (meta.step0, meta.dstep, meta.dt)
-    val scan = spark.read.parquet(dbDir)
+    val scan = readBlobs(spark, dbDir)
     // the predicate sits directly on the scan, BEFORE the decode flatMap,
     // so Catalyst pushes it into the parquet reader (PushedFilters +
     // row-group stats): a point query reads the row group holding that
@@ -345,7 +369,8 @@ object SeisPipeline {
     * into the parquet scan, so the query touches the row group holding
     * that blob; with the database written `partitionBy(network, station,
     * proc)` and row-group stats on `gll`, a point read is O(one blob) at
-    * any database size. */
+    * any database size. Like every [[readSeisDb]] form it builds with no
+    * Spark job, so the read's one job is the blob scan itself. */
   def readSgtPoint(spark: SparkSession, dbDir: String, gll: Long): DataFrame =
     readSeisDb(spark, dbDir, Some(col("gll") === gll))
       .withColumnRenamed("major", "force").withColumnRenamed("minor", "param")
@@ -372,19 +397,7 @@ object SeisPipeline {
       .select(col("gll"), col("force"), col("comp").as("param"), col("step"), col("value"))
       .as[SeisSample]
       .map(s => s.copy(force = s.param, param = s.force)) // comp-major, then force
-    val blobs = gathered.groupByKey(_.gll)
-      .agg(new graft.functions.SeriesEncoderAgg(bits).toColumn.name("enc"))
-      .toDF("gll", "enc")
-      .select(col("gll"), col("enc.n").as("n"), col("enc.offset").as("offset"),
-        col("enc.scale").as("scale"), col("enc.payload").as("payload"),
-        col("enc.bits").as("bits"), // _encoding_level: readers must dequantize at the written width
-        length(col("enc.payload")).as("payload_len"),
-        lit(network).as("network"), lit(station).as("station"),
-        lit(procName(procIdx)).as("proc"))
-    blobs.write.mode("overwrite")
-      .partitionBy("network", "station", "proc")
-      .parquet(outDir)
-    val written = spark.read.parquet(outDir).count()
+    val written = sinkBlobs(spark, gathered, outDir, network, station, procIdx, bits)
     writeDbMeta(spark, fixtureDir, outDir, dbType = "DGF", forder = "ENZ",
       nGll = written, nForce = 3, nParas = 3, kind = "disp", withGlobal = true,
       bits = bits, dt = dt)

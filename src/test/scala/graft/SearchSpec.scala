@@ -17,6 +17,17 @@ class SearchSpec extends AnyFunSuite {
     d.deleteOnExit(); d.getAbsolutePath
   }
 
+  test("a probe leaves nothing in the session's cache") {
+    val idx = freshDir("nocache")
+    Search.writeKeywordIndex(spark, sf, idx)
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    assert(Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK)
+      .collect().length == Search.Queries.size * Search.TopK)
+    assert(cache.isEmpty, "probeKeywordIndex left a cached Dataset behind")
+  }
+
   test("probe prunes to the query terms' tb partitions at directory level") {
     val idx = freshDir("prune")
     Search.writeKeywordIndex(spark, sf, idx)

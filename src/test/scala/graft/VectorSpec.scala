@@ -555,6 +555,24 @@ class VectorSpec extends AnyFunSuite {
     assert(mhGot.nonEmpty && mhGot == rank(mhRaw, Ordering.Double.TotalOrdering.reverse))
   }
 
+  test("nearestMAssembly: selfDominates without memberRep.cnt is rejected up front") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val repPairs = Seq((1L, 3L, 2.0)).toDF("rep_a", "rep_b", "score")
+    def assemble(memberRep: org.apache.spark.sql.DataFrame) =
+      Vectors.nearestMAssembly(memberRep, repPairs, selfScore = 0.0, scoreAsc = true,
+        m = Vectors.NearestM, selfDominates = true)
+    val e = intercept[IllegalArgumentException] {
+      assemble(Seq((1L, 1L), (2L, 1L), (3L, 3L)).toDF("id", "rep"))
+    }
+    assert(e.getMessage.contains("cnt"), e.getMessage)
+    // the same members with their group sizes assemble: own-group, then cross
+    val got = assemble(Seq((1L, 1L, 2L), (2L, 1L, 2L), (3L, 3L, 1L)).toDF("id", "rep", "cnt"))
+      .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
+    assert(got == Seq((1L, 2L, 0.0, 1L), (1L, 3L, 2.0, 2L), (2L, 1L, 0.0, 1L),
+      (2L, 3L, 2.0, 2L), (3L, 1L, 2.0, 1L), (3L, 2L, 2.0, 2L)))
+  }
+
   test("split leakage audit equals a brute-force cross-split replay of the raw pair kernel") {
     val spark = TestSpark.spark
     import spark.implicits._
