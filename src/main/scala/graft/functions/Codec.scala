@@ -3,8 +3,7 @@ package graft.functions
 import java.io.ByteArrayOutputStream
 import java.util.zip.{CRC32, Deflater, Inflater}
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.SparkSession
 
 /** Encode/decode kernels mirroring the reference's per-point compression
   * chain (SURVEY.md §2.1 R17–R24, `/root/reference/seisdb/DSGT.py:127-170`):
@@ -109,6 +108,12 @@ object Codec {
   def decodeSeries(blob: EncodedBlob): Array[Double] =
     dequantize(inflate(blob.payload), blob.bits, blob.offset, blob.scale)
 
+  /** Largest |v − decoded v| over a series and its encoded blob, decoded
+    * from the real payload bytes (so a mangled zlib stream shows here). */
+  def roundTripError(values: Array[Double], blob: EncodedBlob): Double =
+    values.iterator.zip(decodeSeries(blob).iterator)
+      .map { case (v, d) => math.abs(v - d) }.foldLeft(0.0)(math.max)
+
   /** Register the codec as SQL-callable scalar UDFs on a session (the
     * engine's user-facing function surface). */
   def register(spark: SparkSession): Unit = {
@@ -131,61 +136,3 @@ object Codec {
   * (8 → uint8 codes, 16 → uint16). */
 case class EncodedBlob(n: Int, offset: Double, scale: Double, payload: Array[Byte],
     bits: Int = 8)
-
-/** One long-form sample of the 4-D tensor (SURVEY §1.1 item 3). */
-case class SeisSample(gll: Long, force: Int, param: Int, step: Int, value: Double)
-
-/** Typed Aggregator fusing R17–R22: per-key (GLL point) series gather in
-  * fixed (force, param, step) order → encoded blob. Used via
-  * `ds.groupByKey(_.gll).agg(new SeriesEncoderAgg(bits).toColumn)`; `bits`
-  * is the reference's `_encoding_level` (`DDBbase.py:22`, `DSGT.py:149-152`
-  * — uint8 default, uint16 for higher fidelity).
-  *
-  * Scale note: the buffer holds one point's full retained series (the same
-  * working set the reference keeps per point, `DSGT.py:131-135`), so task
-  * memory is bounded by series length, not partition size; the groupBy
-  * shuffle replaces the reference's dense RAM buffer (SURVEY §3).
-  */
-class SeriesEncoderAgg(bits: Int)
-    extends Aggregator[SeisSample, List[SeisSample], EncodedBlob] {
-  override def zero: List[SeisSample] = Nil
-  override def reduce(b: List[SeisSample], a: SeisSample): List[SeisSample] = a :: b
-  override def merge(b1: List[SeisSample], b2: List[SeisSample]): List[SeisSample] = b1 ::: b2
-  override def finish(b: List[SeisSample]): EncodedBlob = {
-    // (force, param)-major, step-minor — SGT series order (DSGT.py:131-135)
-    val ordered = b.sortBy(s => (s.force, s.param, s.step)).map(_.value).toArray
-    Codec.encodeSeries(ordered, bits)
-  }
-  override def bufferEncoder: Encoder[List[SeisSample]] = Encoders.kryo[List[SeisSample]]
-  override def outputEncoder: Encoder[EncodedBlob] = Encoders.product[EncodedBlob]
-}
-
-/** Default-level (uint8) instance. */
-object SeriesEncoder extends SeriesEncoderAgg(8)
-
-/** Encode + decode-verify stats per point: what the golden test and the
-  * flagship pipeline assert (max_err < scale/255, SURVEY §5 item 2). */
-case class EncodedPointStats(n: Int, offset: Double, scale: Double,
-    payloadLen: Int, crc: Long, maxErr: Double)
-
-class SeriesEncodeStatsAgg(bits: Int)
-    extends Aggregator[SeisSample, List[SeisSample], EncodedPointStats] {
-  override def zero: List[SeisSample] = Nil
-  override def reduce(b: List[SeisSample], a: SeisSample): List[SeisSample] = a :: b
-  override def merge(b1: List[SeisSample], b2: List[SeisSample]): List[SeisSample] = b1 ::: b2
-  override def finish(b: List[SeisSample]): EncodedPointStats = {
-    val ordered = b.sortBy(s => (s.force, s.param, s.step)).map(_.value).toArray
-    val blob = Codec.encodeSeries(ordered, bits)
-    val decoded = Codec.decodeSeries(blob)
-    val maxErr =
-      if (ordered.isEmpty) 0.0
-      else ordered.zip(decoded).map { case (v, d) => math.abs(v - d) }.max
-    EncodedPointStats(blob.n, blob.offset, blob.scale, blob.payload.length,
-      Codec.crc32(blob.payload), maxErr)
-  }
-  override def bufferEncoder: Encoder[List[SeisSample]] = Encoders.kryo[List[SeisSample]]
-  override def outputEncoder: Encoder[EncodedPointStats] = Encoders.product[EncodedPointStats]
-}
-
-/** Default-level (uint8) instance. */
-object SeriesEncodeStats extends SeriesEncodeStatsAgg(8)

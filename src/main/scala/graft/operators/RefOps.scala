@@ -172,33 +172,34 @@ object RefOps {
         count(lit(1)).as("est_bytes"))
       .orderBy(col("user_id"))
 
-  /** R17–R22 fused as the typed [[graft.functions.SeriesEncodeStats]]
-    * Aggregator on events-as-proxy series. ORACLE-CHECKED since r11 (r10
-    * verdict #2 family): the hashed columns are the zlib-FREE half of the
-    * encode chain — offset/scale stats and the decoded round-trip error,
-    * all order-independent quantize arithmetic DuckDB replays directly over
-    * `events` — while the Aggregator still deflates/inflates the real
-    * payload (maxErr is computed from the INFLATED bytes, so a corrupted
-    * zlib round trip cannot hash-pass). */
+  /** R17–R22 fused on events-as-proxy series: each user's samples sorted
+    * into (param, step) order, then encoded and decoded by
+    * [[graft.functions.Codec]]. ORACLE-CHECKED since r11 (r10 verdict #2
+    * family): the hashed columns are the zlib-FREE half of the encode chain
+    * — offset/scale stats and the decoded round-trip error, all
+    * order-independent quantize arithmetic DuckDB replays directly over
+    * `events` — while the real payload is still deflated and inflated
+    * (maxErr is computed from the INFLATED bytes, so a corrupted zlib round
+    * trip cannot hash-pass). */
   val refBlobEncode: Q = (s, d) => {
-    val spark = s
-    import spark.implicits._
     val typeIdx = map_from_arrays(
       array(lit("click"), lit("error"), lit("purchase"), lit("signup"), lit("view")),
       array(lit(0), lit(1), lit(2), lit(3), lit(4)))
+    val encodeStats = udf { (series: Seq[Double]) =>
+      val vals = series.toArray
+      val blob = graft.functions.Codec.encodeSeries(vals)
+      (blob.n, blob.offset, blob.scale, graft.functions.Codec.roundTripError(vals, blob))
+    }
     Tables.events(s, d)
-      .select(col("user_id").as("gll"), lit(0).as("force"),
-        element_at(typeIdx, col("event_type")).as("param"),
-        col("event_id").cast("int").as("step"), col("value"))
-      .as[graft.functions.SeisSample]
-      .groupByKey(_.gll)
-      .agg(graft.functions.SeriesEncodeStats.toColumn.name("enc"))
-      .toDF("user_id", "enc")
-      .select(col("user_id"), col("enc.n").as("n"),
-        round(col("enc.offset"), 12).as("offset_r"),
-        round(col("enc.scale"), 12).as("scale_r"),
-        round(col("enc.maxErr"), 6).as("max_err_r"),
-        (col("enc.maxErr") <= col("enc.scale") / 255.0 + lit(1e-12)).as("within_bound"))
+      .groupBy(col("user_id"))
+      .agg(array_sort(collect_list(struct(element_at(typeIdx, col("event_type")).as("param"),
+        col("event_id").cast("int").as("step"), col("value")))).as("series"))
+      .select(col("user_id"), encodeStats(col("series.value")).as("enc"))
+      .select(col("user_id"), col("enc._1").as("n"),
+        round(col("enc._2"), 12).as("offset_r"),
+        round(col("enc._3"), 12).as("scale_r"),
+        round(col("enc._4"), 6).as("max_err_r"),
+        (col("enc._4") <= col("enc._3") / 255.0 + lit(1e-12)).as("within_bound"))
       .orderBy(col("user_id"))
   }
 

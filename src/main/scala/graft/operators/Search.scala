@@ -577,7 +577,8 @@ object Search {
           ts.iterator.filter(set.contains).map(w => (id, dl, w))
       }
       .toDF("doc_id", "dl", "term")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // not persisted: the key returns a lazy DataFrame, so nothing could
+    // release a cached stream; its two consumers re-run the tokenize pass
     val st = stream.where(col("term").isNull)
       .agg(avg(col("dl")).as("avgdl"), count(lit(1)).as("n_docs"))
     val tf = stream.where(col("term").isNotNull)

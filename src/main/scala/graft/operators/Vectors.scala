@@ -2694,6 +2694,11 @@ object Vectors {
         .write.mode("append").parquet(s"$dir/_tombstones")
     }
 
+  /** The `_tombstones` layout, as [[deleteFromIndex]] writes it. Readers
+    * open it with this schema, so a query on an index with deletes still
+    * builds without a schema-inference job. */
+  private[graft] val TombstoneSchema: StructType = StructType.fromDDL("doc_id BIGINT")
+
   /** The tombstone set of an index dir, None when none exists. Probed via
     * the path's Hadoop FileSystem — a `java.io.File` probe is silently
     * false on hdfs:// / s3a://, which would resurrect every deleted doc
@@ -2705,7 +2710,7 @@ object Vectors {
     if (fs.isDirectory(p) &&
         org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(p))
           .exists(c => !c.getName.startsWith("_")))
-      Some(s.read.parquet(p.toString))
+      Some(s.read.schema(TombstoneSchema).parquet(p.toString))
     else None
   }
 

@@ -16,12 +16,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Fortran record of shape (nGLL, 3) float32 per force×step file).
   *
   * One input partition per snapshot file, and the same planning-time file
-  * pruning options (`step0`/`step1`/`dstep` stride, `forces` subset): the
-  * reference's 1:50 temporal stride must drop files before they become
-  * tasks, which the `binaryFile`+flatMap reader this replaces on the DGF
-  * build path could not do — it listed every file and filtered rows after
-  * the scan. `spark.read.format("disp").option("path", dir).load()` → rows
-  * (force INT, step INT, comp INT, gll LONG, value DOUBLE).
+  * pruning options (`step0`/`step1`/`dstep` stride, `forces` subset, `proc`
+  * slice): the reference's 1:50 temporal stride must drop files before they
+  * become tasks. `spark.read.format("disp").option("path", dir).load()` →
+  * one row per (force, step, global point): (force INT, step INT, gll LONG,
+  * ux, uy, uz DOUBLE), the point's three components. The long-form
+  * per-sample view is [[SeisPipeline.readDisp]].
   */
 class DispDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -36,12 +36,14 @@ class DispDataSource extends TableProvider
 }
 
 object DispDataSource {
+  /** The three components in on-disk order (`disp_reader.py:22`). */
+  val Components: Seq[String] = Seq("ux", "uy", "uz")
+
   val schema: StructType = StructType(Seq(
     StructField("force", IntegerType, nullable = false),
     StructField("step", IntegerType, nullable = false),
-    StructField("comp", IntegerType, nullable = false),
-    StructField("gll", LongType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
+    StructField("gll", LongType, nullable = false)) ++
+    Components.map(StructField(_, DoubleType, nullable = false)))
 
   private[sources] val pathPattern =
     ".*force_([NEZ])/.*_disp_Step_(\\d+)\\.bin$".r
@@ -84,8 +86,9 @@ class DispReaderFactory extends PartitionReaderFactory {
     new DispPartitionReader(partition.asInstanceOf[DispFilePartition].file)
 }
 
-/** Streams one displacement snapshot as rows: 3 components per global GLL
-  * point, interleaved on disk as (gll, comp) float32 (`disp_reader.py:22`). */
+/** Streams one displacement snapshot as one row per global GLL point: its 3
+  * components, interleaved on disk as (gll, comp) float32
+  * (`disp_reader.py:22`), each widened to double. */
 class DispPartitionReader(file: String) extends PartitionReader[InternalRow] {
   private val pat = DispDataSource.pathPattern
   private val pat(forceName, stepStr) = file
@@ -96,13 +99,13 @@ class DispPartitionReader(file: String) extends PartitionReader[InternalRow] {
   require(vals.length % 3 == 0,
     s"displacement record in $file is not (nGLL, 3): ${vals.length} floats")
 
-  private var idx = -1
+  private var g = -1
 
-  override def next(): Boolean = { idx += 1; idx < vals.length }
+  override def next(): Boolean = { g += 1; g < vals.length / 3 }
 
   override def get(): InternalRow =
-    new GenericInternalRow(Array[Any](force, step, idx % 3,
-      (idx / 3).toLong, vals(idx).toDouble))
+    new GenericInternalRow(Array[Any](force, step, g.toLong,
+      vals(3 * g).toDouble, vals(3 * g + 1).toDouble, vals(3 * g + 2).toDouble))
 
   override def close(): Unit = ()
 }

@@ -224,28 +224,26 @@ object SeisFixture {
     out.result()
   }
 
+  /** Replay of the strain reader's six components (xx, yy, zz, xy, xz, yz)
+    * at local point `pt` of force `fi`'s snapshot at `step`: generator
+    * truth → deviatoric encoding → the reader's float32 reconstruction
+    * (`strainfield_reader.py:48-59`). */
+  def strainPointReplay(fi: Int, pt: Int, step: Int): Array[Float] = {
+    def tr(pr: Int): Float = strainTruth(pr, pt + fi * 100000, step)
+    val xx0 = tr(0); val yy0 = tr(1); val zz0 = tr(2)
+    val t = xx0 + yy0 + zz0
+    val xxD = xx0 - t / 3f; val yyD = yy0 - t / 3f
+    val xx = xxD + t / 3f; val yy = yyD + t / 3f
+    Array(xx, yy, t - xx - yy, tr(3), tr(4), tr(5))
+  }
+
   /** Replay of one retained point's SGT series in the encoder's
-    * (force, param, step) order: generator truth → deviatoric encoding →
-    * the reader's float32 reconstruction (`strainfield_reader.py:48-59`),
-    * widened to double exactly as the scan emits it. */
+    * (force, param, step) order ([[strainPointReplay]]), widened to double
+    * exactly as the scan emits it. */
   def sgtSeriesReplay(spec: Int, p: Int): Array[Double] = {
     val pt = spec * NGLL_LOCAL + p
-    val out = Array.newBuilder[Double]
-    for (fi <- 0 until 3; param <- 0 until 6; step <- Steps) {
-      val phase = fi * 100000
-      def tr(pr: Int): Float = strainTruth(pr, pt + phase, step)
-      val xx0 = tr(0); val yy0 = tr(1); val zz0 = tr(2)
-      val t = xx0 + yy0 + zz0
-      val xxD = xx0 - t / 3f; val yyD = yy0 - t / 3f
-      val xx = xxD + t / 3f; val yy = yyD + t / 3f
-      val zz = t - xx - yy
-      val v: Float = param match {
-        case 0 => xx; case 1 => yy; case 2 => zz
-        case 3 => tr(3); case 4 => tr(4); case 5 => tr(5)
-      }
-      out += v.toDouble
-    }
-    out.result()
+    (for (fi <- 0 until 3; param <- 0 until 6; step <- Steps)
+      yield strainPointReplay(fi, pt, step)(param).toDouble).toArray
   }
 
   /** Replay of one retained point's DGF series in the encoder's comp-major

@@ -13,23 +13,29 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSource V2 for SPECFEM strain snapshots (SURVEY §7 M3 upgrade path
-  * from the `binaryFile`+flatMap reader): one input partition per snapshot
-  * file — the dataset's natural parallelism axis (one file per MPI slice ×
-  * force × step), so a 1000-executor cluster reads 1000 files concurrently
-  * with zero coordination.
+/** DataSource V2 for SPECFEM strain snapshots: one input partition per
+  * snapshot file — the dataset's natural parallelism axis (one file per MPI
+  * slice × force × step), so a 1000-executor cluster reads 1000 files
+  * concurrently with zero coordination.
   *
   * Usage: `spark.read.format("strain").option("path", dir).load()` (the
-  * `DataSourceRegister` short name; the FQCN works too) → rows
-  * (force INT, step INT, param INT, spec INT, igll INT, value DOUBLE) with
-  * the R14 tensor reconstruction applied inline during the scan.
+  * `DataSourceRegister` short name; the FQCN works too) → one row per
+  * (force, step, local point): (force INT, step INT, spec INT, igll INT,
+  * xx, yy, zz, xy, xz, yz DOUBLE), the six components of the R14 tensor
+  * reconstruction applied inline during the scan. A row per point, not per
+  * sample, is what the SGT build gathers and shuffles; the long-form
+  * per-sample view is [[SeisPipeline.readStrain]]. The writer takes the
+  * same rows.
   *
   * File-level pruning options — the reference's biggest data reducer is its
   * temporal stride (`DDBbase.py:55-84`, typically 1:50), and at scale that
   * MUST prune files at planning time, not rows after the scan:
   *   - `step0`/`step1` (inclusive/exclusive) + `dstep`: keep only snapshot
   *     files whose step is in the strided range;
-  *   - `forces`: comma-separated subset of N,E,Z directories to read.
+  *   - `forces`: comma-separated subset of N,E,Z directories to read;
+  *   - `proc`: one slice's files (`proc000000_…`), the name the writer
+  *     writes under. SPECFEM writes every slice into one directory, and
+  *     local point ids (spec, igll) are only unique within a slice.
   * Pruned files never become input partitions, so a 1:50 stride plans 1/50th
   * of the tasks and reads 1/50th of the bytes. Row-level filters after the
   * scan stay Catalyst's job. Record-marker validation lives in
@@ -48,13 +54,16 @@ class StrainDataSource extends TableProvider
 }
 
 object StrainDataSource {
+  /** The six tensor components in the reference's param order
+    * (`strainfield_reader.py:57-59`). */
+  val Components: Seq[String] = Seq("xx", "yy", "zz", "xy", "xz", "yz")
+
   val schema: StructType = StructType(Seq(
     StructField("force", IntegerType, nullable = false),
     StructField("step", IntegerType, nullable = false),
-    StructField("param", IntegerType, nullable = false),
     StructField("spec", IntegerType, nullable = false),
-    StructField("igll", IntegerType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
+    StructField("igll", IntegerType, nullable = false)) ++
+    Components.map(StructField(_, DoubleType, nullable = false)))
 
   private[sources] val pathPattern =
     ".*force_([NEZ])/.*_strain_field_Step_(\\d+)\\.bin$".r
@@ -76,24 +85,28 @@ object StrainDataSource {
     case _ => None
   }
 
-  /** Planning-time file pruning from read options (stride + force subset).
+  /** Planning-time file pruning from read options (stride, force subset,
+    * slice).
     * The stride anchors at `step0` when given, else at the SMALLEST step
     * actually present in the (range/force-filtered) listing — anchoring a
     * bare `dstep` at 0 would silently drop every file whose steps don't
     * happen to be multiples of the stride. */
   private[sources] case class Pruning(step0: Option[Int], step1: Option[Int],
-      dstep: Int, forces: Option[Set[String]]) {
+      dstep: Int, forces: Option[Set[String]], proc: Option[String]) {
     def keepsRange(force: String, step: Int): Boolean =
       forces.forall(_.contains(force)) &&
         step0.forall(step >= _) &&
         step1.forall(step < _)
 
-    /** Full filter over a listing: range/force filter, then stride from the
-      * anchor. `parsePath` extracts (force, step) — defaults to the strain
+    def keepsProc(path: String): Boolean =
+      proc.forall(p => new java.io.File(path).getName.startsWith(p + "_"))
+
+    /** Full filter over a listing: slice/range/force filter, then stride
+      * from the anchor. `parsePath` extracts (force, step) — defaults to the strain
       * naming; the displacement source passes its own pattern. */
     def prune(paths: Seq[String],
         parsePath: String => Option[(String, Int)] = parse): Seq[String] = {
-      val inRange = paths.flatMap(p => parsePath(p).collect {
+      val inRange = paths.filter(keepsProc).flatMap(p => parsePath(p).collect {
         case (force, step) if keepsRange(force, step) => (p, step)
       })
       val anchor = step0.orElse(inRange.map(_._2).minOption).getOrElse(0)
@@ -108,7 +121,8 @@ object StrainDataSource {
       Option(options.get("step0")).map(_.toInt),
       Option(options.get("step1")).map(_.toInt),
       dstep,
-      Option(options.get("forces")).map(_.split(",").map(_.trim).toSet))
+      Option(options.get("forces")).map(_.split(",").map(_.trim).toSet),
+      Option(options.get("proc")))
   }
 }
 
@@ -119,9 +133,9 @@ class StrainTable(path: String) extends Table with SupportsRead with SupportsWri
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE).asJava
 
-  /** Write path: long-form tensor rows → Fortran snapshot files (the exact
-    * inverse of the read path's R14 reconstruction — xx/yy/zz are re-encoded
-    * as trace + deviatoric records). The write declares a clustered
+  /** Write path: point rows → Fortran snapshot files (the exact inverse of
+    * the read path's R14 reconstruction — xx/yy/zz are re-encoded as trace +
+    * deviatoric records). The write declares a clustered
     * distribution on (force, step) — each snapshot file's content lands in
     * exactly one task — AND an ordering on (force, step), so a task
     * receives its snapshots as contiguous runs and the writer holds ONE
@@ -165,8 +179,9 @@ class StrainReaderFactory extends PartitionReaderFactory {
     new StrainPartitionReader(partition.asInstanceOf[StrainFilePartition].file)
 }
 
-/** Streams one snapshot file as rows: 6 reconstructed tensor components per
-  * local GLL point (xx, yy, zz, xy, xz, yz — `strainfield_reader.py:57-59`). */
+/** Streams one snapshot file as one row per local GLL point: its six
+  * reconstructed tensor components (xx, yy, zz, xy, xz, yz —
+  * `strainfield_reader.py:57-59`), each float32 widened to double. */
 class StrainPartitionReader(file: String) extends PartitionReader[InternalRow] {
   private val pat = StrainDataSource.pathPattern
   private val pat(forceName, stepStr) = file
@@ -177,28 +192,20 @@ class StrainPartitionReader(file: String) extends PartitionReader[InternalRow] {
     .map(Fortran.floatsLE)
   require(recs.length == 6, s"expected 6 strain records in $file, got ${recs.length}")
   private val Seq(tr, xxD, yyD, xy, xz, yz) = recs
+  require(recs.forall(_.length == tr.length), s"strain records of unequal length in $file")
 
   private var pt = -1
-  private var param = 5
-  private val comps = new Array[Double](6)
 
-  override def next(): Boolean = {
-    param += 1
-    if (param == 6) {
-      param = 0
-      pt += 1
-      if (pt >= tr.length) return false
-      val xx = xxD(pt) + tr(pt) / 3f
-      val yy = yyD(pt) + tr(pt) / 3f
-      comps(0) = xx; comps(1) = yy; comps(2) = tr(pt) - xx - yy
-      comps(3) = xy(pt); comps(4) = xz(pt); comps(5) = yz(pt)
-    }
-    true
+  override def next(): Boolean = { pt += 1; pt < tr.length }
+
+  override def get(): InternalRow = {
+    val xx = xxD(pt) + tr(pt) / 3f
+    val yy = yyD(pt) + tr(pt) / 3f
+    new GenericInternalRow(Array[Any](force, step,
+      pt / SeisFixture.NGLL_LOCAL, pt % SeisFixture.NGLL_LOCAL,
+      xx.toDouble, yy.toDouble, (tr(pt) - xx - yy).toDouble,
+      xy(pt).toDouble, xz(pt).toDouble, yz(pt).toDouble))
   }
-
-  override def get(): InternalRow =
-    new GenericInternalRow(Array[Any](force, step, param,
-      pt / SeisFixture.NGLL_LOCAL, pt % SeisFixture.NGLL_LOCAL, comps(param)))
 
   override def close(): Unit = ()
 }
@@ -249,60 +256,48 @@ case class StrainWriteCommit(files: Seq[(String, String)]) extends WriterCommitM
   * to its temp file the moment the key changes. Each flush re-encodes to the
   * reference's six deviatoric records (`strainfield_reader.py:48-59`
   * inverted: tr = xx+yy+zz, xx_dev = xx − tr/3, yy_dev = yy − tr/3;
-  * xy/xz/yz pass through). Incomplete snapshots (a param or point missing —
-  * e.g. someone writes a filtered subset) fail loudly with the offending
-  * (force, step, param) rather than corrupting a file. */
+  * xy/xz/yz pass through). An incomplete snapshot (a point missing — e.g.
+  * someone writes a filtered subset) fails loudly with the offending
+  * (force, step, point) rather than corrupting a file. */
 class StrainDataWriter(path: String, proc: String, attemptTag: String)
     extends DataWriter[InternalRow] {
   import scala.collection.mutable
   private var curKey: (Int, Int) = null
-  // param -> (pt -> value), for the CURRENT (force, step) group only
-  private val byParam = mutable.Map.empty[Int, mutable.Map[Int, Float]]
+  // local point -> its six components, for the CURRENT (force, step) group only
+  private val points = mutable.Map.empty[Int, Array[Float]]
   private val written = mutable.Buffer.empty[(String, String)]
 
   override def write(row: InternalRow): Unit = {
     val key = (row.getInt(0), row.getInt(1))
     if (curKey != null && key != curKey) flushGroup()
     curKey = key
-    val pt = row.getInt(3) * SeisFixture.NGLL_LOCAL + row.getInt(4)
-    byParam.getOrElseUpdate(row.getInt(2), mutable.Map.empty)
-      .update(pt, row.getDouble(5).toFloat)
+    points(row.getInt(2) * SeisFixture.NGLL_LOCAL + row.getInt(3)) =
+      Array.tabulate(6)(c => row.getDouble(4 + c).toFloat)
   }
 
   private def flushGroup(): Unit = {
     val (force, step) = curKey
-    def param(p: Int): mutable.Map[Int, Float] = byParam.getOrElse(p,
+    val nPoints = points.keysIterator.max + 1
+    val comps = Array.tabulate(nPoints)(pt => points.getOrElse(pt,
       throw new IllegalStateException(
-        s"incomplete snapshot (force=$force, step=$step): param $p has no rows — " +
-          "the strain write needs all 6 tensor params for every point"))
-    val nPoints = (0 until 6).map(p => param(p).keysIterator.max + 1).max
-    def comp(p: Int): Int => Float = { val m = param(p); pt => m.getOrElse(pt,
-      throw new IllegalStateException(
-        s"incomplete snapshot (force=$force, step=$step): param $p missing point $pt of $nPoints"))
-    }
-    val (xx, yy, zz) = (comp(0), comp(1), comp(2))
+        s"incomplete snapshot (force=$force, step=$step): missing point $pt of $nPoints")))
     val recs = (0 until 6).map { r =>
-      val rec = if (r >= 3) comp(r) else null
-      val vals = new Array[Float](nPoints)
-      var pt = 0
-      while (pt < nPoints) {
-        val tr = xx(pt) + yy(pt) + zz(pt)
-        vals(pt) = r match {
+      Fortran.bytesOfFloats(comps.map { c =>
+        val tr = c(0) + c(1) + c(2)
+        r match {
           case 0 => tr
-          case 1 => xx(pt) - tr / 3f
-          case 2 => yy(pt) - tr / 3f
-          case _ => rec(pt) // records 3..5 = params 3..5 (xy, xz, yz)
+          case 1 => c(0) - tr / 3f
+          case 2 => c(1) - tr / 3f
+          case _ => c(r) // records 3..5 = components 3..5 (xy, xz, yz)
         }
-        pt += 1
-      }
-      Fortran.bytesOfFloats(vals)
+      })
     }
     val f = new java.io.File(path,
       s"force_${SeisFixture.Forces(force)}/${proc}_strain_field_Step_$step.bin")
     val tmp = new java.io.File(f.getParentFile, s".${f.getName}.inprogress-$attemptTag")
     Fortran.writeRecordFile(tmp, recs)
     written += ((tmp.getPath, f.getPath))
-    byParam.clear()
+    points.clear()
     curKey = null
   }
 
@@ -315,5 +310,5 @@ class StrainDataWriter(path: String, proc: String, attemptTag: String)
     written.foreach { case (tmp, _) =>
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(tmp))
     }
-  override def close(): Unit = byParam.clear()
+  override def close(): Unit = points.clear()
 }

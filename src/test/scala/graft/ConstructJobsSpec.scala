@@ -31,13 +31,18 @@ class ConstructJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = spark.sparkContext.addSparkListener(counter)
   override def afterAll(): Unit = spark.sparkContext.removeSparkListener(counter)
 
-  /** Asserts `build` starts `want` Spark jobs; returns its DataFrame. */
-  private def assertJobs(what: String, want: Long)(build: => DataFrame): DataFrame = {
+  /** `body`'s result and the Spark jobs it started. */
+  private def counted[T](body: => T): (T, Long) = {
     ListenerBusBridge.drain(spark.sparkContext)
     val before = started.get
-    val df = build
+    val out = body
     ListenerBusBridge.drain(spark.sparkContext)
-    val n = started.get - before
+    (out, started.get - before)
+  }
+
+  /** Asserts `build` starts `want` Spark jobs; returns its DataFrame. */
+  private def assertJobs(what: String, want: Long)(build: => DataFrame): DataFrame = {
+    val (df, n) = counted(build)
     assert(n == want, s"$what started $n Spark jobs while building its DataFrame, want $want")
     df
   }
@@ -87,6 +92,34 @@ class ConstructJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nGll = SeisPipeline.readDbMeta(spark, sgt).nGll
     assert(assertJobs("readSgtDb", 0)(SeisPipeline.readSgtDb(spark, sgt)).count() == nGll * sgtPer)
     assert(assertJobs("readDgfDb", 0)(SeisPipeline.readDgfDb(spark, dgf)).count() == nGll * dgfPer)
+  }
+
+  test("SGT/DGF builds: at most five Spark jobs each, count without a read-back") {
+    val fixture = SeisFixture.ensure()
+    val (sgt, dgf) = (tmp("cj_build_sgt"), tmp("cj_build_dgf"))
+    // index scan, broadcast of the kept points, shuffle map stage, blob
+    // write, _meta write
+    val (nSgt, sgtJobs) = counted(SeisPipeline.createSgtDb(spark, fixture, sgt, "CI", "CJ", bits = 16))
+    assert(sgtJobs <= 5, s"createSgtDb started $sgtJobs Spark jobs")
+    val (nDgf, dgfJobs) = counted(SeisPipeline.createDgfDb(spark, fixture, dgf, "CI", "CJ", bits = 16))
+    assert(dgfJobs <= 5, s"createDgfDb started $dgfJobs Spark jobs")
+    // the returned count is the kept points, and every one was written
+    assert(nSgt == SeisFixture.keptIndexReplay().length && nDgf == nSgt)
+    assert(spark.read.parquet(sgt).count() == nSgt && spark.read.parquet(dgf).count() == nDgf)
+  }
+
+  test("IVF query after a delete: declared tombstone schema, zero construction jobs") {
+    import spark.implicits._
+    val ivf = tmp("cj_ivf_del")
+    Vectors.writeIvfIndex(spark, d, ivf)
+    Vectors.deleteFromIndex(spark, ivf, Seq(1L).toDF("doc_id"))
+    assertDeclared(Vectors.TombstoneSchema, s"$ivf/_tombstones")
+    val probe = Tables.embeddings(spark, d).where(col("vec_id") === 0)
+      .select(col("embedding").cast("array<double>")).as[Array[Double]].head()
+    Vectors.queryIvfIndex(spark, ivf, probe).collect() // warm
+    val got = assertJobs("queryIvfIndex after a delete", 0)(
+      Vectors.queryIvfIndex(spark, ivf, probe, excludeId = Some(0L))).collect()
+    assert(got.length == 10 && !got.map(_.getLong(0)).contains(1L))
   }
 
   test("IVF / PQ / IVFADC: declared layouts, driver-side codebooks, construction jobs") {

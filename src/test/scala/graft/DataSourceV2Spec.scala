@@ -6,7 +6,7 @@ import graft.sources.{SeisFixture, SeisPipeline, StrainBatchWrite, StrainDataSou
 
 class DataSourceV2Spec extends AnyFunSuite {
 
-  test("DSv2 strain source equals the binaryFile+flatMap reader") {
+  test("DSv2 strain source replays the fixture's reconstructed tensor") {
     val spark = TestSpark.spark
     val dir = SeisFixture.ensure()
     val v2 = spark.read.format(classOf[StrainDataSource].getName)
@@ -16,11 +16,15 @@ class DataSourceV2Spec extends AnyFunSuite {
     val byName = spark.read.format("strain").option("path", dir).load()
     assert(byName.schema == StrainDataSource.schema)
     assert(byName.count() == v2.count())
-    val cols = Seq("force", "step", "param", "spec", "igll", "value").map(col)
-    val a = v2.select(cols: _*).orderBy(cols: _*).collect().toSeq
-    val b = SeisPipeline.readStrain(spark, dir)
-      .select(cols: _*).orderBy(cols: _*).collect().toSeq
-    assert(a.size == b.size && a == b)
+    val got = v2.collect().map(r =>
+      (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> (4 until 10).map(r.getDouble))
+    val nPoints = SeisFixture.NSPEC * SeisFixture.NGLL_LOCAL
+    val want = for (fi <- 0 until 3; step <- SeisFixture.Steps; pt <- 0 until nPoints)
+      yield (fi, step, pt / SeisFixture.NGLL_LOCAL, pt % SeisFixture.NGLL_LOCAL) ->
+        SeisFixture.strainPointReplay(fi, pt, step).map(_.toDouble).toSeq
+    assert(got.length == want.length && got.toMap == want.toMap)
+    // the long-form view carries the same samples, one row each
+    assert(SeisPipeline.readStrain(spark, dir).count() == 6L * want.length)
   }
 
   test("one input partition per snapshot file (the parallelism axis)") {
@@ -62,12 +66,14 @@ class DataSourceV2Spec extends AnyFunSuite {
     assert(new java.io.File(s"$out/force_N/proc000000_strain_field_Step_0.bin").isFile)
     val back = spark.read.format(classOf[StrainDataSource].getName)
       .option("path", out).load()
-    val keys = Seq("force", "step", "param", "spec", "igll")
-    val joined = src.withColumnRenamed("value", "va")
-      .join(back.withColumnRenamed("value", "vb"), keys)
+    val keys = Seq("force", "step", "spec", "igll")
+    val comps = StrainDataSource.Components
+    val joined = src.select(keys.map(col) ++ comps.map(c => col(c).as(s"a_$c")): _*)
+      .join(back.select(keys.map(col) ++ comps.map(c => col(c).as(s"b_$c")): _*), keys)
     assert(joined.count() == src.count() && back.count() == src.count())
     // deviatoric re-encode + float32 reconstruction may differ by an ulp
-    val maxDiff = joined.agg(max(abs(col("va") - col("vb")))).head().getDouble(0)
+    val maxDiff = joined.agg(greatest(comps.map(c =>
+      max(abs(col(s"a_$c") - col(s"b_$c")))): _*)).head().getDouble(0)
     assert(maxDiff < 1e-12, s"round-trip max diff $maxDiff")
   }
 
@@ -95,8 +101,9 @@ class DataSourceV2Spec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("strain_2pc").toString
     def freshWriter(tag: String) = {
       val w = new StrainDataWriter(out, "proc000000", tag)
-      for (param <- 0 until 6; pt <- 0 until 4)
-        w.write(new GenericInternalRow(Array[Any](0, 0, param, 0, pt, param + pt * 0.5)))
+      for (pt <- 0 until 4)
+        w.write(new GenericInternalRow(
+          Array[Any](0, 0, 0, pt) ++ (0 until 6).map(c => c + pt * 0.5)))
       w
     }
     val msg1 = freshWriter("a1").commit().asInstanceOf[StrainWriteCommit]
@@ -113,16 +120,18 @@ class DataSourceV2Spec extends AnyFunSuite {
       "job commit must rename temps into place")
   }
 
-  test("DSv2 disp source equals the binaryFile+flatMap reader; short name resolves") {
+  test("DSv2 disp source replays the fixture's displacement; short name resolves") {
     val spark = TestSpark.spark
     val dir = SeisFixture.ensure()
     val v2 = spark.read.format("disp").option("path", dir).load()
     assert(v2.schema == graft.sources.DispDataSource.schema)
-    val cols = Seq("force", "step", "comp", "gll", "value").map(col)
-    val a = v2.select(cols: _*).orderBy(cols: _*).collect().toSeq
-    val b = SeisPipeline.readDispViaBinaryFile(spark, dir)
-      .select(cols: _*).orderBy(cols: _*).collect().toSeq
-    assert(a.size == b.size && a == b)
+    val got = v2.collect().map(r =>
+      (r.getInt(0), r.getInt(1), r.getLong(2)) -> (3 until 6).map(r.getDouble))
+    val want = for (fi <- 0 until 3; step <- SeisFixture.Steps; g <- 0 until SeisFixture.nGllGlobal)
+      yield (fi, step, g.toLong) ->
+        (0 until 3).map(c => SeisFixture.dispTruth(c + fi * 3, g, step).toDouble)
+    assert(got.length == want.length && got.toMap == want.toMap)
+    assert(SeisPipeline.readDisp(spark, dir).count() == 3L * want.length)
   }
 
   test("disp source prunes files at planning time (stride + force subset)") {
@@ -144,7 +153,7 @@ class DataSourceV2Spec extends AnyFunSuite {
     val dir = SeisFixture.ensure()
     val v2 = spark.read.format(classOf[StrainDataSource].getName)
       .option("path", dir).load()
-      .where(col("force") === 0 && col("param") === 0 && col("step") === 0)
-    assert(v2.count() == SeisFixture.NSPEC * SeisFixture.NGLL_LOCAL)
+      .where(col("force") === 0 && col("step") === 0 && col("spec") === 1)
+    assert(v2.count() == SeisFixture.NGLL_LOCAL)
   }
 }

@@ -168,6 +168,16 @@ class PlansSpec extends AnyFunSuite {
     assert(viaSql.count() == expected)
   }
 
+  test("GraftSession.builder keeps a configured local dir, defaults only without one") {
+    val bare = new org.apache.spark.SparkConf(false)
+    assert(GraftSession.defaultLocalDir(bare, Map.empty).nonEmpty)
+    assert(GraftSession.defaultLocalDir(bare, Map("SPARK_GRAFT_LOCAL_DIR" -> "/scratch/g"))
+      .contains("/scratch/g"))
+    val configured = new org.apache.spark.SparkConf(false).set("spark.local.dir", "/data/spark")
+    assert(GraftSession.defaultLocalDir(configured, Map.empty).isEmpty)
+    assert(GraftSession.defaultLocalDir(bare, Map("SPARK_LOCAL_DIRS" -> "/data/a,/data/b")).isEmpty)
+  }
+
   test("GraftSession.install puts the full surface on a live session") {
     val spark = TestSpark.spark
     GraftSession.install(spark)

@@ -28,6 +28,14 @@ class SearchSpec extends AnyFunSuite {
     assert(cache.isEmpty, "probeKeywordIndex left a cached Dataset behind")
   }
 
+  test("hybrid RRF leaves nothing in the session's cache") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    assert(Search.hybridRrf(spark, sf).collect().nonEmpty)
+    assert(cache.isEmpty, "hybridRrf left a cached Dataset behind")
+  }
+
   test("probe prunes to the query terms' tb partitions at directory level") {
     val idx = freshDir("prune")
     Search.writeKeywordIndex(spark, sf, idx)

@@ -1,10 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.Codec
-import graft.sources.{SeisFixture, SeisPipeline}
+import graft.sources.{Fortran, SeisFixture, SeisPipeline}
 
 class SinkSpec extends AnyFunSuite {
 
@@ -141,6 +142,73 @@ class SinkSpec extends AnyFunSuite {
       .select("force", "param", "step", "value").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(got == full && got.nonEmpty)
+  }
+
+  /** (rows, crc32) over every blob row of a built database, sorted by gll:
+    * gll, n, the exact bits of offset and scale, crc32(payload) and bits. */
+  private def blobDigest(db: String): String = {
+    val spark = TestSpark.spark
+    val rows = spark.read.schema(SeisPipeline.BlobSchema).parquet(db)
+      .select("gll", "n", "offset", "scale", "payload", "bits").collect()
+      .sortBy(_.getLong(0)).map { r =>
+        Seq(r.getLong(0), r.getInt(1), java.lang.Double.doubleToLongBits(r.getDouble(2)),
+          java.lang.Double.doubleToLongBits(r.getDouble(3)),
+          Codec.crc32(r.getAs[Array[Byte]](4)), r.getInt(5)).mkString(",")
+      }
+    s"${rows.length}:${Codec.crc32(rows.mkString("\n").getBytes("UTF-8"))}"
+  }
+
+  test("golden blob digest: SGT/DGF payload bytes and headers at 8 and 16 bits") {
+    val spark = TestSpark.spark
+    val dir = SeisFixture.ensure()
+    val got = for (kind <- Seq("SGT", "DGF"); bits <- Seq(8, 16)) yield {
+      val out = Files.createTempDirectory(s"golden_${kind}_$bits").toString
+      if (kind == "SGT") SeisPipeline.createSgtDb(spark, dir, out, "CI", "GD", bits = bits)
+      else SeisPipeline.createDgfDb(spark, dir, out, "CI", "GD", bits = bits)
+      s"$kind/$bits" -> blobDigest(out)
+    }
+    // recorded from the groupByKey/Aggregator build this layout was first
+    // written with; the series-granularity build must reproduce it bit for bit
+    assert(got == Seq("SGT/8" -> "79:3563682697", "SGT/16" -> "79:1000118556",
+      "DGF/8" -> "79:2968777485", "DGF/16" -> "79:3727676382"))
+  }
+
+  test("a build reads only its own slice of a shared snapshot directory") {
+    val spark = TestSpark.spark
+    val dir = SeisFixture.ensure()
+    // SPECFEM writes every slice into one directory: slice 0 is the fixture,
+    // slice 1 sits beside it with its own ibool and every value doubled
+    val two = Files.createTempDirectory("two_slices")
+    val src = java.nio.file.Paths.get(dir)
+    Files.walk(src).iterator().asScala.filter(Files.isRegularFile(_))
+      .filter(_.getFileName.toString.startsWith(SeisFixture.Proc)).foreach { f =>
+        val rel = src.relativize(f).toString
+        val recs = Fortran.readRecords(Files.readAllBytes(f))
+        val other =
+          if (rel.endsWith("_ibool.bin")) recs.map(r => Fortran.bytesOfInts(Fortran.intsLE(r).reverse))
+          else recs.map(r => Fortran.bytesOfFloats(Fortran.floatsLE(r).map(_ * 2f)))
+        Fortran.writeRecordFile(two.resolve(rel).toFile, recs)
+        Fortran.writeRecordFile(
+          two.resolve(rel.replace(SeisFixture.Proc, SeisPipeline.procName(1))).toFile, other)
+      }
+    assert(spark.read.format("strain").option("path", two.toString)
+      .option("proc", SeisPipeline.procName(1)).load().rdd.getNumPartitions ==
+      3 * SeisFixture.Steps.length)
+    def build(kind: String, from: String, procIdx: Int): String = {
+      val out = Files.createTempDirectory(s"slice_${kind}_$procIdx").toString
+      if (kind == "SGT") SeisPipeline.createSgtDb(spark, from, out, "CI", "SL", procIdx, bits = 16)
+      else SeisPipeline.createDgfDb(spark, from, out, "CI", "SL", procIdx, bits = 16)
+      out
+    }
+    for (kind <- Seq("SGT", "DGF")) {
+      val single = build(kind, dir, 0)
+      val shared = build(kind, two.toString, 0)
+      assert(blobDigest(shared) == blobDigest(single), kind)
+      assert(SeisPipeline.readDbMeta(spark, shared) == SeisPipeline.readDbMeta(spark, single), kind)
+      val other = build(kind, two.toString, 1)
+      assert(new java.io.File(s"$other/network=CI/station=SL/proc=proc000001").isDirectory)
+      assert(blobDigest(other) != blobDigest(single), kind)
+    }
   }
 
   test("readDgfDb maps indices back to (comp, force, step) comp-major") {
