@@ -1,9 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import scala.util.Try
 
 /** Driver-run benchmark: times every `SparkEntry.queries` entry on
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line.
+  * `SPARK_GRAFT_SF_DIR` and prints two JSON lines ([[Harness.benchLines]]):
+  * the full per-key line, then the compact line the driver parses.
   *
   * Methodology: (1) a warmup pass at sf0.001 pays Catalyst codegen
   * compilation and JIT warmup outside the timed region; (2) the sf-dir
@@ -16,9 +19,7 @@ import scala.util.Try
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.create(cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
 
     // Leg-exclusivity guard (r11 verdict #3): a concurrent sbt/Spark JVM
     // contends for all 32 cores and uniformly inflates a leg 20–40% (the
@@ -55,24 +56,14 @@ object Bench {
     }
     Try(Tables.events(spark, sfDir).foreach(_ => ()))
 
-    // key isolation: a query's persist/localCheckpoint blocks must not
-    // survive into its alphabetical neighbor's timing (round-2 lesson:
-    // q_doc_fingerprint inherited q_dedup_clusters*' BlockManager pressure
-    // in both passes). Cached plans and persisted RDDs are dropped between
-    // keys so every number reflects that query alone.
-    def isolate(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-
     // a query that throws is marked, not silently folded into the numbers:
     // its per-query time is negated and it's excluded from the total
-    def timedPass(): Seq[(String, Double, Boolean)] =
+    def timedPass(): Seq[Harness.Timing] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
         val dt = (System.nanoTime() - t0) / 1e9
-        isolate()
+        Harness.isolate(spark)
         (name, dt, ok)
       }
     // two full timed passes, per-query minimum: environment noise (CPU
@@ -82,77 +73,19 @@ object Bench {
     // what regressions are judged against
     val pass1 = timedPass()
     val pass2 = timedPass()
-    val results = pass1.zip(pass2).map { case ((k, v1, ok1), (_, v2, ok2)) =>
+    val best = pass1.zip(pass2).map { case ((k, v1, ok1), (_, v2, ok2)) =>
       (k, math.min(v1, v2), ok1 && ok2)
     }
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v, ok) => "\"" + k + "\":" + fmt(if (ok) v else -v) }
-      .mkString("{", ",", "}")
-    // COLD evidence (r12 verdict #3): pass-1 carries the first-touch costs
-    // the min-of-2 gate deliberately excludes — ensureIndex builds, referee
-    // computation/memoization, shuffle-file priming. Emitting it per key in
-    // the archived artifact makes first-query-of-a-session cost a measured
-    // fact instead of an inference; the gate's min-of-2 number is unchanged.
-    val qsCold = pass1.map { case (k, v, ok) => "\"" + k + "\":" + fmt(if (ok) v else -v) }
-      .mkString("{", ",", "}")
-    val errors = results.collect { case (k, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.collect { case (_, v, true) => v }.sum
-    val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"queries_pass1":$qsCold,"errors":$errors,"sf":"$sfDir"}"""
-    // The driver captures only the LAST ~2000 chars of output and parses the
-    // JSON line out of that window; at 110+ queries the full per-query line
-    // is ~3000 chars, so its head (metric/value) falls outside the window and
-    // the round's bench goes unparsed (every BENCH_r*.json so far has
-    // parsed:null for exactly this reason). Emit BOTH: the full line first
-    // (archived to bench/driver_full_last.json for forensic reads), then a
-    // compact final line hard-capped under the window — total + errors + as
-    // many per-query times as fit, slowest first (the ones plan audits care
-    // about), with the omitted fast tail summarized so the arithmetic stays
-    // auditable: value == sum(queries) + omitted_sum.
-    try {
-      val dir = new java.io.File("bench"); dir.mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("bench/driver_full_last.json"), fullLine + "\n")
-      // per-leg archive (r10 verdict #7): a multi-leg scaling run sets
-      // SPARK_GRAFT_BENCH_OUT per leg so every leg's FULL per-key map
-      // survives as a committed artifact instead of only the last one
-      sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
-        Option(java.nio.file.Paths.get(p).getParent)
-          .foreach(d => java.nio.file.Files.createDirectories(d))
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(p), fullLine + "\n")
-      }
-    } catch { case _: Throwable => () }
-    println(fullLine)
-    // top-20 keys only (VERDICT r13 #5): the r13 compact line carried 54
-    // keys (~1700 chars) and still fell outside the driver's parse window
-    // next to the full line's tail — 20 slowest keys keep the whole line
-    // under ~900 chars with the arithmetic invariant intact
-    // (value == sum(queries) + omitted_sum)
-    val budget = 700 // chars for the per-query map in the compact line
-    val bySlow = results.sortBy { case (_, v, ok) => (ok, -v) }
-    val picked = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Boolean)]
-    var used = 0
-    bySlow.foreach { case r @ (k, _, _) =>
-      val w = k.length + 9 // "k":0.123,
-      if (picked.size < 20 && used + w <= budget) { picked += r; used += w }
+    val (fullLine, compactLine) = Harness.benchLines(best, pass1, sfDir)
+    // both lines also land as files a driver can read directly; stdout
+    // stays the fallback for drivers that only capture output
+    def archive(name: String, line: String): Unit = Try {
+      Files.createDirectories(Paths.get("bench"))
+      Files.writeString(Paths.get(s"bench/$name"), line + "\n")
     }
-    val pickedKeys = picked.map(_._1).toSet
-    val omitted = results.filterNot { case (k, _, _) => pickedKeys(k) }
-    val qsCompact = picked.sortBy(_._1)
-      .map { case (k, v, ok) => "\"" + k + "\":" + fmt(if (ok) v else -v) }
-      .mkString("{", ",", "}")
-    val omittedSum = omitted.collect { case (_, v, true) => v }.sum
-    val compactLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsCompact,""" +
-      s""""n_queries":${results.size},"n_omitted":${omitted.size},"omitted_sum":${fmt(omittedSum)},""" +
-      s""""queries_full":"bench/driver_full_last.json","errors":$errors,"sf":"$sfDir"}"""
-    // retire the log-tail coupling (r12 verdict #6): the compact line also
-    // lands as its OWN file a driver can read directly; the stdout tail
-    // stays as the fallback for drivers that only capture output
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench/driver_compact_last.json"), compactLine + "\n")
-    catch { case _: Throwable => () }
+    archive("driver_full_last.json", fullLine)
+    println(fullLine)
+    archive("driver_compact_last.json", compactLine)
     println(compactLine)
     spark.stop()
   }

@@ -1,0 +1,81 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** What the driver-facing mains (`Bench`, `Verify`, `Time`) share: the
+  * session start, per-key cache isolation, number formatting, JSON string
+  * escaping, and the two JSON lines `Bench` prints. */
+object Harness {
+
+  /** A graft session on `SPARK_GRAFT_CPUS` cores (`defaultCpus` when the
+    * variable is unset), logging at WARN. */
+  def session(defaultCpus: Int): SparkSession = {
+    val spark = GraftSession.create(
+      sys.env.get("SPARK_GRAFT_CPUS").fold(defaultCpus)(_.toInt))
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Key isolation: a query's persist/localCheckpoint blocks must not
+    * survive into the next key's run (round-2 lesson: q_doc_fingerprint
+    * inherited q_dedup_clusters*' BlockManager pressure in both passes). */
+  def isolate(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
+
+  def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** JSON string literal: backslash, quote, and ALL control chars (< 0x20)
+    * escaped — a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** One key's bench time in seconds, and whether every pass succeeded. */
+  type Timing = (String, Double, Boolean)
+
+  /** Bench's (full, compact) JSON lines from the per-key minimum `best`
+    * and the first pass `pass1`, both in key order. A failed key's time is
+    * negated, listed in `errors` and left out of the total.
+    *
+    * The driver parses the bench JSON out of only the LAST ~2000 chars of
+    * output, and at 110+ keys the full line is ~3000 chars, so the compact
+    * line comes last and stays under that window: the total, the errors and
+    * at most 20 per-key times (slowest first, failures before them), with
+    * the omitted tail summarized so `value == sum(queries) + omitted_sum`. */
+  def benchLines(best: Seq[Timing], pass1: Seq[Timing], sfDir: String): (String, String) = {
+    def times(rs: Seq[Timing]): String =
+      rs.map { case (k, v, ok) => jsonString(k) + ":" + fmt(if (ok) v else -v) }
+        .mkString("{", ",", "}")
+    val errors = best.collect { case (k, _, false) => jsonString(k) }.mkString("[", ",", "]")
+    val total = best.collect { case (_, v, true) => v }.sum
+    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","""
+    val tail = s""""errors":$errors,"sf":${jsonString(sfDir)}}"""
+    // pass 1 carries the first-touch costs the min-of-2 gate excludes
+    // (ensureIndex builds, referee memoization, shuffle-file priming)
+    val full = head + s""""queries":${times(best)},"queries_pass1":${times(pass1)},""" + tail
+
+    val budget = 700 // chars for the per-query map in the compact line
+    val picked = scala.collection.mutable.ArrayBuffer.empty[Timing]
+    var used = 0
+    best.sortBy { case (_, v, ok) => (ok, -v) }.foreach { case r @ (k, _, _) =>
+      val w = k.length + 9 // "k":0.123,
+      if (picked.size < 20 && used + w <= budget) { picked += r; used += w }
+    }
+    val pickedKeys = picked.map(_._1).toSet
+    val omitted = best.filterNot(r => pickedKeys(r._1))
+    val omittedSum = omitted.collect { case (_, v, true) => v }.sum
+    val compact = head + s""""queries":${times(picked.sortBy(_._1).toSeq)},""" +
+      s""""n_queries":${best.size},"n_omitted":${omitted.size},"omitted_sum":${fmt(omittedSum)},""" +
+      s""""queries_full":"bench/driver_full_last.json",""" + tail
+    (full, compact)
+  }
+}

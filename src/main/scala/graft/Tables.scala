@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -49,6 +50,13 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
+
+  /** `embeddings.parquet`'s columns: a read through it opens the table
+    * without a schema-inference job. */
+  val EmbeddingsSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
 
   /** SQL front door: register every table as a temp view so users can run
     * plain `spark.sql` against the engine (with the events nanos→micros

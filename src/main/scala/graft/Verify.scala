@@ -1,13 +1,19 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare
+  * (`tools/local_verify.py` compares whatever subdirectories exist).
+  *
+  * Usage: `sbt "runMain graft.Verify <sfDir> <outDir> [key ...]"` — with
+  * keys, only those queries and their oracle SQL are written. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.create(cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = args(0); val outDir = args(1)
+    val keys = args.drop(2).toSet
+    val unknown = keys -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown keys: ${unknown.toSeq.sorted.mkString(", ")}")
+    def selected(k: String): Boolean = keys.isEmpty || keys(k)
+    val spark = Harness.session(defaultCpus = 4)
     // correctness runs take the full freshness guarantee: the fingerprint
     // memos' 30 s staleness horizon is a bench-only trade (BPE merges and
     // the shared DataFp behind the referee/index/count memos)
@@ -33,31 +39,17 @@ object Verify {
           "byte-replay oracles (multimodal/fingerprint/minhash/simhash) " +
           "assume ASCII and WILL hash-mismatch on those keys")
     }
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // key isolation, same as Bench: one query's persisted blocks must not
-      // linger into the next (cache hygiene on a long-lived session)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.isolate(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

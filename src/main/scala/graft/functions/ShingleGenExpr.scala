@@ -58,8 +58,8 @@ object Tok {
 
   /** Hand-rolled `s.split("\\s+", -1)` (r15 optimization round): the
     * String.split facade re-compiles the pattern and runs the regex engine
-    * per call — 29% of the whole tokenize cost on the real corpus
-    * (KernelBench). Semantics are bit-identical to the regex form: a
+    * per call — 29% of the whole tokenize cost on the real corpus.
+    * Semantics are bit-identical to the regex form: a
     * leading separator yields a leading "" (\s+ matches have width ≥ 1, so
     * the no-leading-empty rule for zero-width matches never applies),
     * limit −1 keeps the trailing "", and "" → [""]. MediaIOSpec pins

@@ -95,7 +95,7 @@ object Audio {
     *
     * r15: the stream comes from [[MediaIO.audioStream]] — the same stock
     * JDK codec, with `AudioSystem`'s per-call provider discovery hoisted to
-    * a per-thread cache (63.8 → 3.4 µs/doc in KernelBench; the facade call
+    * a per-thread cache (63.8 → 3.4 µs/doc on the sf0.1 corpus; the facade call
     * spent 95% of its time on SPI dispatch, not decoding). MediaIOSpec pins
     * sample-exact parity against the facade on the real corpus. */
   private[graft] def decodeSamples(

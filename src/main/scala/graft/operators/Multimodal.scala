@@ -117,7 +117,7 @@ object Multimodal {
     * r15: dispatches on the blob magic to the cached per-thread stock JDK
     * reader ([[MediaIO.readBmp]] / [[Video.decodePng]]) instead of paying
     * `ImageIO.read`'s registry scan + reader construction per blob
-    * (9.5 → 5.9 µs/doc in KernelBench). Anything else falls back to the
+    * (9.5 → 5.9 µs/doc on the sf0.1 corpus). Anything else falls back to the
     * facade. MediaIOSpec pins pixel-exact parity against `ImageIO.read` on
     * the real corpus. */
   private[graft] def decode(blob: Array[Byte]): BufferedImage =

@@ -913,7 +913,8 @@ object Vectors {
       probe: Array[Double], topK: Int): DataFrame = {
     val spark = s
     import spark.implicits._
-    val base = Tables.embeddings(s, d).select(col("vec_id"), vec.as("v"))
+    val base = s.read.schema(Tables.EmbeddingsSchema).parquet(s"$d/embeddings.parquet")
+      .select(col("vec_id"), vec.as("v"))
     val filtered =
       if (candIds.length <= 1000) base.where(col("vec_id").isin(candIds: _*))
       else base.join(broadcast(candIds.toDF("vec_id")), Seq("vec_id"), "left_semi")
@@ -2616,8 +2617,8 @@ object Vectors {
     * screens, index appends, streaming micro-batches) where the
     * contraction's per-call aggregate + join-back overhead dwarfs any
     * within-batch dup collapse. r16: the r15 contraction silently tripled
-    * the per-trigger cost of the streaming ingest sinks (StreamBench
-    * minhash_ingest 11.1 → ~30 s at sf1 — the committed stream_r15.json
+    * the per-trigger cost of the streaming ingest sinks (minhash_ingest
+    * 11.1 → ~30 s at sf1 — the committed stream_r15.json
     * predates the contraction commit, so no leg ever measured it); the
     * at-rest CORPUS builds keep the contracted [[simhashSigsOf]], where
     * dup-dense mass is the design target. Same kernel, same rows. */

@@ -27,12 +27,11 @@ import graft.functions.Codec
   */
 object SeisPipeline {
 
-  /** ibool scan (R4): Fortran record → long-form (spec, igll, gll), 1-based
-    * shifted to 0-based (`ibool_reader.py:27-31`). */
-  def readIbool(spark: SparkSession, dir: String): DataFrame = {
+  /** ibool scan (R4) of slice `procIdx`: Fortran record → long-form
+    * (spec, igll, gll), 1-based shifted to 0-based (`ibool_reader.py:27-31`). */
+  def readIbool(spark: SparkSession, dir: String, procIdx: Int = 0): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*_ibool.bin").load(dir)
+    spark.read.format("binaryFile").load(s"$dir/${procName(procIdx)}_ibool.bin")
       .select("content").as[Array[Byte]]
       .flatMap { bytes =>
         val ids = Fortran.intsLE(Fortran.readRecords(bytes).head)
@@ -217,12 +216,13 @@ object SeisPipeline {
     * locate blobs. 27-variant emits the reference's exact (i,j,k)→(k,j,i)
     * transposed order (`ibool_reader.py:81-86`); out-of-range element →
     * zeros, matching the reference's quirk (`:52,73`). Runs as a point
-    * filter on the ibool scan — at scale this is a partition-pruned lookup,
-    * not a full scan (the ibool table would be bucketed by spec). */
+    * filter on slice `procIdx`'s ibool scan — at scale this is a
+    * partition-pruned lookup, not a full scan (the ibool table would be
+    * bucketed by spec). */
   def elementLookup(spark: SparkSession, dir: String, indexElement: Int,
-      use27: Boolean): DataFrame = {
+      use27: Boolean, procIdx: Int = 0): DataFrame = {
     import spark.implicits._
-    val rows = readIbool(spark, dir)
+    val rows = readIbool(spark, dir, procIdx)
       .where(col("spec") === indexElement)
       .orderBy(col("igll"))
       .select(col("igll"), col("gll"))

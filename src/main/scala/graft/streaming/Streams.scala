@@ -348,25 +348,11 @@ object Streams {
   }
 
   /** File-replay stream of the documents table (same shape as
-    * [[eventsStream]] — in production a crawl-drop/Kafka source). Two
-    * session confs (unset by default — specs and replay-equality
-    * contracts see the sf layout's single flat file as one batch) let
-    * StreamBench measure PER-BATCH cost without threading options through
-    * every twin's signature: `graft.stream.docsDir` points the source at
-    * a SHARDED documents dir (Spark-written part files) instead of
-    * `sfDir/documents.parquet`, and `graft.stream.maxFilesPerTrigger`
-    * replays it one file per trigger. */
-  def docsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = spark.readStream.schema(docsRawSchema)
-    val src = spark.conf.getOption("graft.stream.docsDir") match {
-      case Some(dir) => base.option("pathGlobFilter", "part-*")
-      case None      => base.option("pathGlobFilter", "documents.parquet")
-    }
-    val withTrigger = spark.conf.getOption("graft.stream.maxFilesPerTrigger")
-      .fold(src)(n => src.option("maxFilesPerTrigger", n))
-    withTrigger.parquet(
-      spark.conf.getOption("graft.stream.docsDir").getOrElse(sfDir))
-  }
+    * [[eventsStream]] — in production a crawl-drop/Kafka source): the sf
+    * layout's single `documents.parquet` file, replayed as one batch. */
+  def docsStream(spark: SparkSession, sfDir: String): DataFrame =
+    spark.readStream.schema(docsRawSchema)
+      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
 
   case class GopherSnap(docId: Long, nTokens: Long, mwlR: Double,
       fLen: Long, fMwl: Long, fRep: Long, fDr: Long, keep: Long)

@@ -159,10 +159,18 @@ class ConstructJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(assertJobs("queryIvfIndex", 0)(
       Vectors.queryIvfIndex(spark, ivf, probe, excludeId = Some(0L))).collect().length == 10)
     // PQ and IVFADC: the ADC candidate collect sizes the exact refine's IN
-    // list, and the refine opens the embeddings table by inference
-    assert(assertJobs("queryPqIndex", 2)(
+    // list; the refine opens the embeddings table by its declared schema
+    assert(assertJobs("queryPqIndex", 1)(
       Vectors.queryPqIndex(spark, d, pq, probe, excludeId = Some(0L))).collect().length == 10)
-    assert(assertJobs("queryIvfPqIndex", 2)(
+    assert(assertJobs("queryIvfPqIndex", 1)(
       Vectors.queryIvfPqIndex(spark, d, ipq, probe, excludeId = Some(0L))).collect().length == 10)
+  }
+
+  test("declared embeddings schema matches every fixture scale factor") {
+    val root = new java.io.File(d).getParentFile
+    val sfs = root.listFiles().filter(f => f.getName.startsWith("sf") &&
+      new java.io.File(f, "embeddings.parquet").exists()).map(_.getPath).sorted
+    assert(sfs.contains(d), s"no fixture scale factors beside $d")
+    sfs.foreach(sf => assertDeclared(Tables.EmbeddingsSchema, s"$sf/embeddings.parquet"))
   }
 }

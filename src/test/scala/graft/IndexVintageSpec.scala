@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{DataFp, Multimodal, Vectors}
+import graft.operators.{Audio, DataFp, Multimodal, Search, Vectors, Video}
 
 /** Append-aware index vintage evolution (VERDICT r13 #1): an append-only
   * corpus delta routes through the kind's append verb at Θ(batch) — the
@@ -142,5 +142,34 @@ class IndexVintageSpec extends AnyFunSuite {
       .collect().head
     assert(top.getLong(0) == 700001L)
     assert(math.abs(top.getDouble(1) - 1.0) < 1e-9)
+  }
+
+  test("every index kind appends an append-only delta without rebuilding") {
+    val spark = TestSpark.spark
+    val writers = Map[String, (String, String) => Unit](
+      "vsig" -> ((d, p) => Video.writeVsigIndex(spark, d, p)),
+      "minhash" -> ((d, p) => Vectors.writeMinhashIndex(spark, d, p)),
+      "ivf" -> ((d, p) => Vectors.writeIvfIndex(spark, d, p)),
+      "simhash" -> ((d, p) => Vectors.writeSimhashIndex(spark, d, p)),
+      "dhash" -> ((d, p) => Multimodal.writeDhashIndex(spark, d, p)),
+      "afp" -> ((d, p) => Audio.writeAfpIndex(spark, d, p)),
+      Search.KeywordKind -> ((d, p) => Search.writeKeywordIndex(spark, d, p)),
+      "pq" -> ((d, p) => Vectors.writePqIndex(spark, d, p)),
+      "ivfpq" -> ((d, p) => Vectors.writeIvfPqIndex(spark, d, p)),
+      "ivf_fixed" -> ((d, p) => Vectors.writeIvfFixedIndex(spark, d, p)),
+      "pq_fixed" -> ((d, p) => Vectors.writePqFixedIndex(spark, d, p)))
+    assert(writers.keySet == Vectors.appendPlans.keySet)
+    for ((kind, plan) <- Vectors.appendPlans.toSeq.sortBy(_._1)) {
+      val d = cloneDataset(s"vintage_all_$kind")
+      val idx = Vectors.ensureIndex(spark, kind, d)(writers(kind)(d, _))
+      // 30 corpus rows again, under ids past the current maximum
+      val id = if (plan.table == "documents.parquet") "doc_id" else "vec_id"
+      val table = spark.read.parquet(s"$d/${plan.table}")
+      val maxId = table.agg(max(col(id))).head().getLong(0)
+      table.orderBy(col(id)).limit(30).withColumn(id, col(id) + lit(maxId + 1))
+        .write.mode("append").parquet(s"$d/${plan.table}")
+      freshFp()
+      assert(Vectors.ensureIndex(spark, kind, d)(noRebuild) == idx, kind)
+    }
   }
 }

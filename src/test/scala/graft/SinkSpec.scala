@@ -209,6 +209,13 @@ class SinkSpec extends AnyFunSuite {
       assert(new java.io.File(s"$other/network=CI/station=SL/proc=proc000001").isDirectory)
       assert(blobDigest(other) != blobDigest(single), kind)
     }
+    // element lookups read only their own slice's ibool
+    def lookup(from: String, procIdx: Int): Seq[Long] =
+      SeisPipeline.elementLookup(spark, from, 2, use27 = false, procIdx)
+        .orderBy("pos").collect().map(_.getLong(1)).toSeq
+    assert(lookup(two.toString, 0) == lookup(dir, 0))
+    val reversed = SeisFixture.iboolIds().reverse.map(_ - 1L)
+    assert(lookup(two.toString, 1) == reversed.slice(2 * 125, 3 * 125).toSeq)
   }
 
   test("readDgfDb maps indices back to (comp, force, step) comp-major") {
