@@ -50,7 +50,9 @@ object Harness {
     * output, and at 110+ keys the full line is ~3000 chars, so the compact
     * line comes last and stays under that window: the total, the errors and
     * at most 20 per-key times (slowest first, failures before them), with
-    * the omitted tail summarized so `value == sum(queries) + omitted_sum`. */
+    * the omitted tail summarized so that `value == sum(queries) +
+    * omitted_sum` over the keys that succeeded: a failed key's negated
+    * entry in `queries` is in neither `value` nor `omitted_sum`. */
   def benchLines(best: Seq[Timing], pass1: Seq[Timing], sfDir: String): (String, String) = {
     def times(rs: Seq[Timing]): String =
       rs.map { case (k, v, ok) => jsonString(k) + ":" + fmt(if (ok) v else -v) }
@@ -60,7 +62,7 @@ object Harness {
     val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","""
     val tail = s""""errors":$errors,"sf":${jsonString(sfDir)}}"""
     // pass 1 carries the first-touch costs the min-of-2 gate excludes
-    // (ensureIndex builds, referee memoization, shuffle-file priming)
+    // (Index.ensure builds, referee memoization, shuffle-file priming)
     val full = head + s""""queries":${times(best)},"queries_pass1":${times(pass1)},""" + tail
 
     val budget = 700 // chars for the per-query map in the compact line

@@ -265,7 +265,7 @@ object Audio {
     fingerprint(decodeSamples(mediaBlob(payload))._2)
   }
 
-  private def fpFrame(s: SparkSession, docs: DataFrame): DataFrame = {
+  private[operators] def fpFrame(s: SparkSession, docs: DataFrame): DataFrame = {
     val spark = s
     import spark.implicits._
     // r15: decode+hash once per DISTINCT text ([[Contract.perTextOf]])
@@ -275,45 +275,12 @@ object Audio {
     }.select(col("doc_id"), col("fingerprint"))
   }
 
-  /** Persist the at-rest acoustic-fingerprint index — one (doc_id,
-    * fingerprint) row per at-rest clip, 16 bytes/doc; the audio twin of
-    * [[Multimodal.writeDhashIndex]] with the same lifecycle verbs
-    * ([[appendAfpIndex]], [[Vectors.deleteFromIndex]] tombstones,
-    * [[Vectors.compactIndex]] over `fps`). */
-  def writeAfpIndex(s: SparkSession, d: String, dir: String): Unit =
-    fpFrame(s, Tables.documents(s, d)
-        .where(col("source") =!= Vectors.MinhashBatchSource))
-      .write.mode("overwrite").parquet(s"$dir/fps")
-
-  /** Partition-append a batch's fingerprint rows — no rebuild. */
-  def appendAfpIndex(s: SparkSession, dir: String, batch: DataFrame): Unit =
-    IndexLease.withLease(s, s"$dir/_lease") {
-      fpFrame(s, batch).write.mode("append").parquet(s"$dir/fps")
-    }
-
-  /** Screen an incoming batch against the at-rest fingerprint index:
-    * dup iff an at-rest clip shares the fingerprint, best match = min
-    * at-rest id; index contracted per fingerprint (exact under
-    * equality), tombstones dropped first. Θ(batch) output; at-rest audio
-    * never re-decoded. */
-  def afpScreenOf(s: SparkSession, idx: String, newDocs: DataFrame): DataFrame = {
-    val refs = Vectors.dropTombstoned(s, idx,
-        s.read.parquet(s"$idx/fps"), "doc_id")
-      .groupBy(col("fingerprint")).agg(min(col("doc_id")).as("ref_id"))
-    fpFrame(s, newDocs)
-      .join(refs, Seq("fingerprint"), "left")
-      .select(col("doc_id"),
-        col("ref_id").isNotNull.cast("long").as("is_dup"),
-        coalesce(col("ref_id"), lit(-1L)).as("best_match_id"))
-      .orderBy(col("doc_id"))
-  }
-
   /** AT-REST audio screen as a suite key — "has this clip's acoustic
     * fingerprint been heard before?" (memoized build, the screen-family
     * pattern). */
   val audioScreenAtRest: Q = Vectors.served((s, d) => {
-    val idx = Vectors.ensureIndex(s, "afp", d)(p => writeAfpIndex(s, d, p))
-    afpScreenOf(s, idx, Tables.documents(s, d)
+    val idx = Index.ensure(s, Index.Afp, d)
+    Index.screenByKey(Index.Afp, s, idx, Tables.documents(s, d)
       .where(col("source") === Vectors.MinhashBatchSource))
   })
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * r14 (VERDICT r13 #1): the fingerprint is now a splitmix fold over the
   * dataset's sorted DATA-FILE manifest — (relative path, length, mtime)
   * per file, metadata files (`_SUCCESS`, dot-files) excluded — and the
-  * manifest itself is exposed ([[snapshot]]) so [[Vectors.ensureIndex]]
+  * manifest itself is exposed ([[snapshot]]) so [[Index.ensure]]
   * can DIFF two vintages: an append-only delta (old files intact, new
   * files added) routes through the index append verbs at Θ(batch) instead
   * of a full Θ(corpus) rebuild. Deriving the fp FROM the manifest keeps

@@ -48,7 +48,7 @@ private[graft] object IndexLease {
 
   /** The reader half of the commit protocol (VERDICT r13 #4): a
     * cross-process reader probing an index BETWEEN the two renames of
-    * [[graft.operators.Vectors.ensureIndex]]'s swap (target moved aside,
+    * [[graft.operators.Index.ensure]]'s swap (target moved aside,
     * staging not yet renamed in) sees a missing path for a few
     * milliseconds. Writers can't close that window with plain renames
     * (rename onto an existing dir nests on HDFS and pollutes on

@@ -416,7 +416,7 @@ object Multimodal {
 
   /** Per-doc dHash frame — the shared decode+hash pass of [[imageDedup]]
     * and the at-rest screen family. */
-  private def dhashFrame(s: SparkSession,
+  private[operators] def dhashFrame(s: SparkSession,
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = s
     import spark.implicits._
@@ -461,51 +461,12 @@ object Multimodal {
       .orderBy(col("doc_id"))
   }
 
-  /** Persist the at-rest perceptual-hash index: one (doc_id, dhash_hi,
-    * dhash_lo) row per at-rest image — 24 bytes per doc; the pixels never
-    * move again. The image twin of [[Vectors.writeMinhashIndex]], sharing
-    * its lifecycle verbs: [[appendDhashIndex]], [[Vectors.deleteFromIndex]]
-    * (tombstones respected by [[dhashScreenOf]]), and
-    * [[Vectors.compactIndex]] over the `dhashes` subdir. */
-  def writeDhashIndex(s: SparkSession, d: String, dir: String): Unit =
-    dhashFrame(s, Tables.documents(s, d)
-        .where(col("source") =!= Vectors.MinhashBatchSource))
-      .write.mode("overwrite").parquet(s"$dir/dhashes")
-
-  /** Partition-append a batch's dHash rows — the screen → append → ingest
-    * loop, no rebuild (the [[Vectors.appendMinhashIndex]] contract). */
-  def appendDhashIndex(s: SparkSession, dir: String,
-      batch: org.apache.spark.sql.DataFrame): Unit =
-    IndexLease.withLease(s, s"$dir/_lease") {
-      dhashFrame(s, batch).write.mode("append").parquet(s"$dir/dhashes")
-    }
-
-  /** Screen an incoming batch against the at-rest dHash index: a batch
-    * image is a dup iff an at-rest image shares its 64-bit dHash; best
-    * match = the min at-rest id (deterministic). The index side contracts
-    * per hash to its min ref — exact under hash equality — and tombstoned
-    * ids are dropped before the contraction, so takedowns bite
-    * immediately. Output Θ(batch); at-rest pixels never re-decoded. */
-  def dhashScreenOf(s: SparkSession, idx: String,
-      newDocs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val refs = Vectors.dropTombstoned(s, idx,
-        s.read.parquet(s"$idx/dhashes"), "doc_id")
-      .groupBy(col("dhash_hi"), col("dhash_lo"))
-      .agg(min(col("doc_id")).as("ref_id"))
-    dhashFrame(s, newDocs)
-      .join(refs, Seq("dhash_hi", "dhash_lo"), "left")
-      .select(col("doc_id"),
-        col("ref_id").isNotNull.cast("long").as("is_dup"),
-        coalesce(col("ref_id"), lit(-1L)).as("best_match_id"))
-      .orderBy(col("doc_id"))
-  }
-
   /** AT-REST image screen as a suite key — "has this incoming image's
     * pixel fingerprint been seen before?" against the persisted index
     * (memoized build, the screen-family pattern). */
   val imageScreenAtRest: Q = Vectors.served((s, d) => {
-    val idx = Vectors.ensureIndex(s, "dhash", d)(p => writeDhashIndex(s, d, p))
-    dhashScreenOf(s, idx, Tables.documents(s, d)
+    val idx = Index.ensure(s, Index.Dhash, d)
+    Index.screenByKey(Index.Dhash, s, idx, Tables.documents(s, d)
       .where(col("source") === Vectors.MinhashBatchSource))
   })
 

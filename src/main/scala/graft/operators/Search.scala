@@ -62,15 +62,6 @@ object Search {
     * the probe cost model (terms' buckets only) is unchanged by the count. */
   val TokenBuckets = 64
 
-  /** [[Vectors.ensureIndex]] kind id of the keyword layout, VERSIONED:
-    * the r15 layout adds the champion bands + factored relations, and the
-    * vintage fingerprint covers the CORPUS, not the index format — an
-    * unversioned kind would adopt a committed v1 index (no `fpostings/`)
-    * and the factored probe would fail at read. Bumping the kind gives
-    * the new layout its own path; stale v1 dirs are orphaned, never
-    * misread. */
-  val KeywordKind = "keyword2"
-
   /** Results per query. */
   val TopK = 5
 
@@ -113,27 +104,13 @@ object Search {
     java.lang.Math.floorMod(c.getValue, TokenBuckets.toLong)
   }
 
-  /** Build the inverted index: tokenize once, combine to per-(doc, term)
-    * tf with the doc length carried on every posting (denormalized so a
-    * probe never joins back to the corpus), land under `tb=` dirs. */
-  def writeKeywordIndex(s: SparkSession, d: String, path: String): Unit = {
-    // a BUILD is from-scratch: clear any prior layout at the path first —
-    // the append path below uses mode("append"), and appending a rebuild
-    // onto a surviving on-disk index (e.g. a fresh JVM over the memoized
-    // warehouse path) would silently double every posting
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    appendKeywordIndex(s, path, Tables.documents(s, d))
-  }
-
-  /** Partition-APPEND a batch into the persisted layout — new postings
-    * land as new files under their existing `tb=` dirs, the stats log
-    * gains one delta row; no read of the existing index, no rebuild.
-    * `batch` needs (doc_id, text). */
-  def appendKeywordIndex(s: SparkSession, path: String, batch: DataFrame,
-      blockRows: Int = ImpactBlockRows): Unit =
-    IndexLease.withLease(s, s"$path/_lease") {
+  /** [[Index.keyword]]'s encoder: tokenize once, combine to per-(doc,
+    * term) tf with the doc length carried on every posting (denormalized
+    * so a probe never joins back to the corpus). New postings land as new
+    * files under their `tb=` dirs and the stats log gains one delta row, so
+    * an append never reads or rewrites the existing index. `batch` needs
+    * (doc_id, text). */
+  private[operators] def keywordRows(batch: DataFrame, blockRows: Int): Encoded = {
     val w = batch.select(col("doc_id"),
         md5(coalesce(col("text"), lit(""))).as("fam"),
         toks(col("text")).as("ws"))
@@ -156,32 +133,36 @@ object Search {
       .withColumn("tb", tbOf(col("term")))
       .withColumn("bb", least(col("blk"), lit(ImpactTailBand)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ranked
-      .repartition(col("tb"), col("bb"))
-      .sortWithinPartitions(col("term"), col("blk"), col("doc_id"))
-      .write.mode("append").partitionBy("tb", "bb").parquet(s"$path/postings")
-    ranked.groupBy(col("term"), col("blk"))
+    Encoded(Seq(
+      ranked
+        .repartition(col("tb"), col("bb"))
+        .sortWithinPartitions(col("term"), col("blk"), col("doc_id")),
+      blockDirOf(ranked),
+      // the DEDUP-FACTORED projection: one posting row per (term, family)
+      // where a family is an exact-text equivalence class (md5 — the
+      // q_exact_dedup discipline). Members share ws verbatim, hence tf and
+      // dl: max() below is a constant over the group, fam_n the family's
+      // df contribution. Θ(vocab · families) rows — FLAT in the replica
+      // count, which is what makes the factored probe decade-flat.
+      factoredOf(ranked),
+      ranked.select(col("fam"), col("doc_id")).distinct()
+        .withColumn("fb", fbOf(col("fam"))),
+      w.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))),
+      cached = Seq(ranked, w))
+  }
+
+  /** `_blockdir` rows of a set of postings. */
+  private def blockDirOf(posts: DataFrame): DataFrame =
+    posts.groupBy(col("term"), col("blk"))
       .agg(count(lit(1)).as("n"), max(col("tf")).as("max_tf"),
         min(col("dl")).as("min_dl"))
-      .write.mode("append").parquet(s"$path/_blockdir")
-    // the DEDUP-FACTORED projection: one posting row per (term, family)
-    // where a family is an exact-text equivalence class (md5 — the
-    // q_exact_dedup discipline). Members share ws verbatim, hence tf and
-    // dl: max() below is a constant over the group, fam_n the family's
-    // df contribution. Θ(vocab · families) rows — FLAT in the replica
-    // count, which is what makes the factored probe decade-flat.
-    writeFactored(ranked
-      .groupBy(col("term"), col("fam"))
+
+  /** `fpostings/` rows (term, fam, tf, dl, fam_n, tb) of a set of postings. */
+  private def factoredOf(posts: DataFrame): DataFrame =
+    posts.groupBy(col("term"), col("fam"))
       .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl"),
         count(lit(1)).as("fam_n"))
-      .withColumn("tb", tbOf(col("term"))),
-      ranked.select(col("fam"), col("doc_id")).distinct(), path)
-    w.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .write.mode("append").parquet(s"$path/_statslog")
-    ranked.unpersist(blocking = false)
-    w.unpersist(blocking = false)
-    ()
-  }
+      .withColumn("tb", tbOf(col("term")))
 
   /** Family bucket of a fam hash — the `fams/` membership layout's
     * `fb =` partition key, computed driver-side for point-read pruning
@@ -193,16 +174,6 @@ object Search {
   }
 
   private def fbOf(fam: Column): Column = pmod(crc32(fam), lit(TokenBuckets.toLong))
-
-  /** Land the factored relations: `fpostings/` (term, fam, tf, dl, fam_n)
-    * under `tb=` dirs, `fams/` membership (fam, doc_id) under `fb=` dirs
-    * for winner point reads. */
-  private def writeFactored(fposts: DataFrame, members: DataFrame,
-      path: String): Unit = {
-    fposts.write.mode("append").partitionBy("tb").parquet(s"$path/fpostings")
-    members.withColumn("fb", fbOf(col("fam")))
-      .write.mode("append").partitionBy("fb").parquet(s"$path/fams")
-  }
 
   /** Probe the persisted index with a query workload: prune to the query
     * terms' `tb=` partitions (directory-level — the terms' buckets are
@@ -229,7 +200,7 @@ object Search {
     // shared index-lifecycle discipline); their df contribution drops with
     // them since df derives from the live postings below. The GLOBAL stats
     // (n_docs, avgdl) refresh at compaction — corpus statistics, not rows.
-    val posts = Vectors.dropTombstoned(s, idx,
+    val posts = Index.dropTombstoned(s, idx,
         spark.read.parquet(s"$idx/postings")
           .where(col("tb").isin(buckets: _*) && col("term").isin(terms: _*)),
         "doc_id")
@@ -297,7 +268,7 @@ object Search {
     val dfT = spark.read.parquet(s"$idx/_blockdir")
       .where(col("term").isin(terms: _*))
       .groupBy(col("term")).agg(sum(col("n")).cast("double").as("df"))
-    val posts = Vectors.dropTombstoned(s, idx,
+    val posts = Index.dropTombstoned(s, idx,
         spark.read.parquet(s"$idx/postings")
           .where(col("tb").isin(buckets: _*) && col("bb") < blocks &&
             col("blk") < blocks && col("term").isin(terms: _*)),
@@ -349,7 +320,7 @@ object Search {
     */
   def probeKeywordIndexFactored(s: SparkSession, idx: String,
       queries: Seq[(Long, String)], k: Int): DataFrame = {
-    if (Vectors.tombstonesOf(s, idx).isDefined)
+    if (Index.tombstonesOf(s, idx).isDefined)
       return probeKeywordIndex(s, idx, queries, k)
     val spark = s
     import spark.implicits._
@@ -406,61 +377,33 @@ object Search {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** Physical COMPACTION of the keyword layout — [[Vectors.compactIndex]]
-    * over the `tb=`-partitioned postings, then the `_statslog` is REBUILT
+  /** [[Index.keyword]]'s compaction follow-up: once the compaction removed
+    * the victims' postings and family members, the `_statslog` is REBUILT
     * to one exact row from the surviving postings' distinct (doc_id, dl)
-    * pairs (staged to a sibling, swapped by FS rename): after compaction
-    * the index is bit-identical to a fresh build over the surviving
-    * corpus — deletes leave no statistical residue. Between takedown and
-    * compaction the global (n_docs, avgdl) intentionally still count the
-    * victims: immediate-takedown correctness is "the doc stops matching",
-    * stats refresh on the maintenance schedule. */
-  def compactKeywordIndex(s: SparkSession, dir: String): Unit =
-    IndexLease.withLease(s, s"$dir/_lease") {
-    val had = Vectors.tombstonesOf(s, dir).isDefined
-    Vectors.compactIndexUnguarded(s, dir, Seq("postings"))
-    if (had) {
-      val conf = s.sparkContext.hadoopConfiguration
-      val fresh = s.read.parquet(s"$dir/postings")
-        .select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/_statslog__compact_tmp")
-      fresh.write.mode("overwrite").parquet(tmp.toString)
-      val live = new org.apache.hadoop.fs.Path(s"$dir/_statslog")
-      val fs = live.getFileSystem(conf)
-      fs.delete(live, true)
-      fs.rename(tmp, live)
-      // the block directory follows the same discipline: recount the
-      // SURVIVING postings per (term, blk) so the impact probe's df (and
-      // its block-max bounds) carry no statistical residue either
-      val freshBd = s.read.parquet(s"$dir/postings")
-        .groupBy(col("term"), col("blk"))
-        .agg(count(lit(1)).as("n"), max(col("tf")).as("max_tf"),
-          min(col("dl")).as("min_dl"))
-      val bdTmp = new org.apache.hadoop.fs.Path(s"$dir/_blockdir__compact_tmp")
-      freshBd.write.mode("overwrite").parquet(bdTmp.toString)
-      val bdLive = new org.apache.hadoop.fs.Path(s"$dir/_blockdir")
-      fs.delete(bdLive, true)
-      fs.rename(bdTmp, bdLive)
-      // the factored relations rebuild from the compacted doc-level
-      // postings (victims gone, families recounted) — this is also what
-      // restores the factored fast path after a takedown window
-      val posts = s.read.parquet(s"$dir/postings")
-      Seq(
-        ("fpostings", posts.groupBy(col("term"), col("fam"))
-          .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl"),
-            count(lit(1)).as("fam_n"))
-          .withColumn("tb", tbOf(col("term"))), "tb"),
-        ("fams", posts.select(col("fam"), col("doc_id")).distinct()
-          .withColumn("fb", fbOf(col("fam"))), "fb"))
-        .foreach { case (sub, df, part) =>
-          val tmp2 = new org.apache.hadoop.fs.Path(s"$dir/${sub}__compact_tmp")
-          df.write.mode("overwrite").partitionBy(part).parquet(tmp2.toString)
-          val live2 = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-          fs.delete(live2, true)
-          fs.rename(tmp2, live2)
-        }
-    }
+    * pairs, and `_blockdir` and `fpostings/` are recounted from them
+    * (each staged to a sibling, swapped by FS rename): after compaction the
+    * index is bit-identical to a fresh build over the surviving corpus —
+    * deletes leave no statistical residue — and the factored fast path,
+    * which serves the doc-level path while tombstones exist, returns.
+    * Between takedown and compaction the global (n_docs, avgdl)
+    * intentionally still count the victims: immediate-takedown correctness
+    * is "the doc stops matching", stats refresh on the maintenance
+    * schedule. */
+  private[operators] def recountKeywordIndex(s: SparkSession, dir: String): Unit = {
+    val posts = s.read.parquet(s"$dir/postings")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    Seq(
+      ("_statslog", posts.select(col("doc_id"), col("dl")).distinct()
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")), Nil),
+      ("_blockdir", blockDirOf(posts), Nil),
+      ("fpostings", factoredOf(posts), Seq("tb")))
+      .foreach { case (sub, df, parts) =>
+        val tmp = new org.apache.hadoop.fs.Path(s"$dir/${sub}__compact_tmp")
+        Index.put(df, parts, "overwrite", tmp.toString)
+        val live = new org.apache.hadoop.fs.Path(s"$dir/$sub")
+        fs.delete(live, true)
+        fs.rename(tmp, live)
+      }
   }
 
   /** AT-REST keyword search as a suite key: the memoized index build (like
@@ -468,7 +411,7 @@ object Search {
     * workload. The bench times the SERVING cost — pruned directory reads +
     * Θ(df) scoring — never a corpus scan. */
   val keywordTopkAtRest: Q = Vectors.served((s, d) => {
-    val idx = Vectors.ensureIndex(s, KeywordKind, d)(p => writeKeywordIndex(s, d, p))
+    val idx = Index.ensure(s, Index.Keyword, d)
     probeKeywordIndex(s, idx, Queries, TopK)
   })
 
@@ -482,7 +425,7 @@ object Search {
     * hash-gated contract, not a recall-bounded one; the overlap against
     * the exact top-k is pinned separately in SearchSpec. */
   val keywordTopkImpact: Q = Vectors.served((s, d) => {
-    val idx = Vectors.ensureIndex(s, KeywordKind, d)(p => writeKeywordIndex(s, d, p))
+    val idx = Index.ensure(s, Index.Keyword, d)
     probeKeywordIndexImpact(s, idx, Queries, TopK)
   })
 
@@ -493,7 +436,7 @@ object Search {
     * ids. On the replicated bench fixtures this is the decade-flat EXACT
     * mode — sf100's 117M posting rows factor to ~155k family rows. */
   val keywordTopkFactored: Q = Vectors.served((s, d) => {
-    val idx = Vectors.ensureIndex(s, KeywordKind, d)(p => writeKeywordIndex(s, d, p))
+    val idx = Index.ensure(s, Index.Keyword, d)
     probeKeywordIndexFactored(s, idx, Queries, TopK)
   })
 
@@ -641,7 +584,7 @@ object Search {
     * reaches the cut (SearchSpec measures it). */
   val SemSlack = 10
 
-  /** Cell count of the trained at-rest IVF layout ([[Vectors.writeIvfIndex]]
+  /** Cell count of the trained at-rest IVF layout ([[Index.Ivf]]
     * default k) — `nProbe >=` this means every cell is probed. */
   val TrainedIvfCells = 16
 
@@ -714,7 +657,7 @@ object Search {
       else hybridRrfIndexedWith(s, d, nProbe = 4))
 
   /** Memoized brute fused referee per (session, dataset): ≤ probes ×
-    * [[HybridK]] rows of bounded metadata (the ensureIndex discipline), so
+    * [[HybridK]] rows of bounded metadata (the Index.ensure discipline), so
     * the graduated serving key pays the Θ(probes·corpus) referee once per
     * dataset and keeps its index-serving cost on repeated passes. */
   private val bruteFusedMemo = new java.util.concurrent.ConcurrentHashMap[
@@ -851,7 +794,7 @@ object Search {
     * [[probeKeywordIndex]] arithmetic with the query-by-example
     * self-exclusion. Returns (query_id, doc_id, r_lex) cut at [[LexTopN]]. */
   private def lexLegAtRest(s: SparkSession, d: String): DataFrame = {
-    val kwIdx = Vectors.ensureIndex(s, KeywordKind, d)(p => writeKeywordIndex(s, d, p))
+    val kwIdx = Index.ensure(s, Index.Keyword, d)
     val spark = s
     import spark.implicits._
     val probeTerms = probeTermsOf(s, d)
@@ -861,7 +804,7 @@ object Search {
     val st = spark.read.parquet(s"$kwIdx/_statslog")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
       .select(col("n_docs"), (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
-    val posts = Vectors.dropTombstoned(s, kwIdx,
+    val posts = Index.dropTombstoned(s, kwIdx,
         spark.read.parquet(s"$kwIdx/postings")
           .where(col("tb").isin(buckets: _*) && col("term").isin(terms: _*)),
         "doc_id")
@@ -895,7 +838,7 @@ object Search {
     * [[ImpactBlockRows]]) regardless of corpus size. */
   private def lexLegAtRestImpact(s: SparkSession, d: String,
       blocks: Int = HybridLexImpactBlocks): DataFrame = {
-    val kwIdx = Vectors.ensureIndex(s, KeywordKind, d)(p => writeKeywordIndex(s, d, p))
+    val kwIdx = Index.ensure(s, Index.Keyword, d)
     val spark = s
     import spark.implicits._
     val probeTerms = probeTermsOf(s, d)
@@ -908,7 +851,7 @@ object Search {
     val dfT = spark.read.parquet(s"$kwIdx/_blockdir")
       .where(col("term").isin(terms: _*))
       .groupBy(col("term")).agg(sum(col("n")).cast("double").as("df"))
-    val posts = Vectors.dropTombstoned(s, kwIdx,
+    val posts = Index.dropTombstoned(s, kwIdx,
         spark.read.parquet(s"$kwIdx/postings")
           .where(col("tb").isin(buckets: _*) && col("bb") < blocks &&
             col("blk") < blocks && col("term").isin(terms: _*)),
@@ -948,8 +891,8 @@ object Search {
     * Falls back to the doc-level leg under live tombstones, like
     * [[probeKeywordIndexFactored]]. */
   private def lexLegAtRestFactored(s: SparkSession, d: String): DataFrame = {
-    val kwIdx = Vectors.ensureIndex(s, KeywordKind, d)(p => writeKeywordIndex(s, d, p))
-    if (Vectors.tombstonesOf(s, kwIdx).isDefined) return lexLegAtRest(s, d)
+    val kwIdx = Index.ensure(s, Index.Keyword, d)
+    if (Index.tombstonesOf(s, kwIdx).isDefined) return lexLegAtRest(s, d)
     val spark = s
     import spark.implicits._
     val probeTerms = probeTermsOf(s, d)
@@ -1005,9 +948,9 @@ object Search {
       lexMode: String = "exact"): DataFrame = {
     val ivfIdx =
       if (semLeg == "ivf")
-        Vectors.ensureIndex(s, "ivf", d)(p => Vectors.writeIvfIndex(s, d, p))
+        Index.ensure(s, Index.Ivf, d)
       else
-        Vectors.ensureIndex(s, "pq", d)(p => Vectors.writePqIndex(s, d, p))
+        Index.ensure(s, Index.Pq, d)
     val spark = s
     import spark.implicits._
     val probeVecs = probeVecsOf(s, d)
@@ -1064,7 +1007,7 @@ object Search {
     * discipline applied to the fused serving topology: the at-rest lexical
     * leg ([[lexLegAtRest]] — the oracle-checked BM25 arithmetic over the
     * persisted keyword index) fused with a semantic leg served from the
-    * PERSISTED fixed-centroid IVF layout ([[Vectors.writeIvfFixedIndex]] —
+    * PERSISTED fixed-centroid IVF layout ([[Index.IvfFixed]] —
     * pinned integer centroids, `cell=` directory pruning at nProbe=4,
     * exact integer L2 rank by (d2 asc, vec_id asc)). Every step of both
     * legs and the [[fuseRrf]] tail is engine-replayable, so the DuckDB
@@ -1077,8 +1020,7 @@ object Search {
     * posting reads + nProbe/[[Vectors.IvfFixedCells]] of the vectors via
     * partition pruning, fusion over two Θ(probes·topN) relations. */
   val hybridRrfIndexedFixed: Q = Vectors.served((s, d) => {
-    val idx = Vectors.ensureIndex(s, "ivf_fixed", d)(
-      p => Vectors.writeIvfFixedIndex(s, d, p))
+    val idx = Index.ensure(s, Index.IvfFixed, d)
     val lex = lexLegAtRest(s, d)
     val sem = probeVecsOf(s, d)
       .map { case (pid, pv) =>
@@ -1097,7 +1039,7 @@ object Search {
 
   /** The PQ-mode sibling of [[hybridRrfIndexedFixed]] (r10 verdict #9):
     * the semantic leg is an ADC scan of the PERSISTED fixed-codebook
-    * 8-byte codes table ([[Vectors.writePqFixedIndex]] /
+    * 8-byte codes table ([[Index.PqFixed]] /
     * [[Vectors.queryPqFixedIndex]]) — the 32×-less-I/O serving mode the
     * trained `semLeg="pq"` option exercises, here in exact Long arithmetic
     * ranked by (adc asc, vec_id asc) so the oracle replays encode, table
@@ -1108,8 +1050,7 @@ object Search {
     * and [[hybridRrfImpactFixed]]: per-probe ADC over the persisted 8-byte
     * codes, exact Long rank (adc asc, vec_id asc), [[SemTopN]] cut. */
   private def semLegPqFixed(s: SparkSession, d: String): DataFrame = {
-    val idx = Vectors.ensureIndex(s, "pq_fixed", d)(
-      p => Vectors.writePqFixedIndex(s, d, p))
+    val idx = Index.ensure(s, Index.PqFixed, d)
     probeVecsOf(s, d)
       .map { case (pid, pv) =>
         Vectors.queryPqFixedIndex(s, idx, pv,

@@ -716,13 +716,20 @@ object Vectors {
       .limit(CodebookSampleSize)
       .select(col("vec_id"), col("v"))
 
+  /** Coarse cells of the trained IVF codebook, in query ([[annIvf]]) and
+    * at rest ([[Index.Ivf]]). */
+  private[operators] val IvfK = 16
+
+  /** (vec_id, v) of embeddings rows: the vectors every ANN codec reads. */
+  private[operators] def vectorsOf(rows: DataFrame): DataFrame =
+    rows.select(col("vec_id"), vec.as("v"))
+
   private[graft] val annIvfRaw: Q = (s, d) => {
     val spark = s
     import spark.implicits._
     val edf = Tables.embeddings(s, d).select(col("vec_id"), vec.as("v"))
     val e = edf.as[(Long, Array[Double])]
-    val k = 16
-    val (cents, centNorms) = sampleAndTrain(edf, k)
+    val (cents, centNorms) = sampleAndTrain(edf, IvfK)
     // probe = vec_id 0, fetched by a pushed-down point read (PushedFilters
     // on the parquet scan), not fished out of the training sample — the
     // hash sample is not guaranteed to contain any particular id
@@ -752,8 +759,8 @@ object Vectors {
       .select(col("vec_id"), round(col("cos"), 4).as("cos_r"))
   }
 
-  /** The persisted IVF index layout ([[writeIvfIndex]], [[appendIvfIndex]]):
-    * (vec_id, v) rows under `cluster=` dirs. Readers pass it to
+  /** The persisted IVF index layout ([[Index.Ivf]]): (vec_id, v) rows
+    * under `cluster=` dirs. Readers pass it to
     * `spark.read.schema`, so a query opens the index without an inference
     * job. */
   private[graft] val IvfSchema: StructType =
@@ -761,7 +768,7 @@ object Vectors {
 
   /** The coarse codebook sidecar (`_codebook`: cluster, centroid) of an
     * IVF or IVFADC index. */
-  private def writeIvfCodebook(s: SparkSession, cents: Array[Array[Double]],
+  private[operators] def writeIvfCodebook(s: SparkSession, cents: Array[Array[Double]],
       indexDir: String): Unit = {
     import s.implicits._
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -786,53 +793,27 @@ object Vectors {
       .take(n).map(_._1)
   }
 
-  /** Build a PERSISTED IVF index — the at-rest form of [[annIvf]], and the
-    * layout a 100 TB similarity-search service actually queries: train the
-    * codebook on a bounded sample, assign every vector to its nearest
-    * centroid in one scan, write hive-partitioned by `cluster` with the
-    * codebook in a `_codebook` sidecar (underscore-prefixed → invisible to
-    * the data listing, like the seisdb `_meta` precedent). Queries then
-    * read ONLY the probed clusters' directories — planning-time partition
-    * pruning, no index structure in memory. */
-  def writeIvfIndex(s: SparkSession, d: String, outDir: String, k: Int = 16): Unit = {
-    val spark = s
+  /** [[Index.Ivf]]'s encoder: every vector under its nearest centroid of
+    * `cents`, one map over the rows. */
+  private[operators] def ivfRowsOf(rows: DataFrame, cents: Array[Array[Double]]): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    val edf = Tables.embeddings(s, d).select(col("vec_id"), vec.as("v"))
-    val e = edf.as[(Long, Array[Double])]
-    val (cents, centNorms) = sampleAndTrain(edf, k)
-    val bc = spark.sparkContext.broadcast((cents, centNorms))
-    e.map { case (id, v) =>
-      val (cs, cn) = bc.value
-      (nearest(cs, cn, v, normA(v)), id, v)
-    }
+    val bc = spark.sparkContext.broadcast((cents, cents.map(normA)))
+    vectorsOf(rows).as[(Long, Array[Double])]
+      .map { case (id, v) =>
+        val (cs, cn) = bc.value
+        (nearest(cs, cn, v, normA(v)), id, v)
+      }
       .toDF("cluster", "vec_id", "v")
-      .write.mode("overwrite").partitionBy("cluster").parquet(outDir)
-    writeIvfCodebook(s, cents, outDir)
   }
 
-  /** IVF member of the index-append trio
-    * ([[appendMinhashIndex]]/[[appendSimhashIndex]]): coarse-quantize a
-    * batch against the PERSISTED `_codebook` (the codebook is fixed at
-    * append time — retraining would silently re-cell the existing corpus,
-    * the exact rebuild this path exists to avoid) and partition-append its
-    * rows into the existing cluster dirs. Queries over the grown index
-    * keep the same nProbe/k pruned-scan shape; periodic re-training +
-    * rebuild remains a deliberate offline operation, as in any IVF
-    * serving system. `batch` needs (vec_id, embedding). */
+  /** [[Index.Ivf]]'s build over dataset `d` into `outDir`. */
+  def writeIvfIndex(s: SparkSession, d: String, outDir: String): Unit = Index.Ivf.build(s, d, outDir)
+
+  /** [[Index.Ivf]]'s append: `batch` (vec_id, embedding) assigned to the
+    * persisted `_codebook`. */
   def appendIvfIndex(s: SparkSession, indexDir: String, batch: DataFrame): Unit =
-    IndexLease.withLease(s, s"$indexDir/_lease") {
-      val spark = s
-      import spark.implicits._
-      val cents = ivfCodebook(s, indexDir)
-      val bc = spark.sparkContext.broadcast((cents, cents.map(normA)))
-      batch.select(col("vec_id"), vec.as("v")).as[(Long, Array[Double])]
-        .map { case (id, v) =>
-          val (cs, cn) = bc.value
-          (nearest(cs, cn, v, normA(v)), id, v)
-        }
-        .toDF("cluster", "vec_id", "v")
-        .write.mode("append").partitionBy("cluster").parquet(indexDir)
-    }
+    Index.Ivf.append(s, indexDir, batch)
 
   /** Query a persisted IVF index: rank centroids against the probe from the
     * k-row codebook (bounded metadata read), then scan ONLY the top
@@ -843,7 +824,7 @@ object Vectors {
   def queryIvfIndex(s: SparkSession, indexDir: String, probe: Array[Double],
       topK: Int = 10, nProbe: Int = 4, excludeId: Option[Long] = None): DataFrame = {
     val chosen = probedCells(ivfCodebook(s, indexDir), probe, nProbe)
-    val scan = dropTombstoned(s, indexDir, s.read.schema(IvfSchema).parquet(indexDir)
+    val scan = Index.dropTombstoned(s, indexDir, s.read.schema(IvfSchema).parquet(indexDir)
       .where(col("cluster").isin(chosen: _*)), "vec_id")
     // "more like this" queries probe with an indexed vector — excludeId
     // drops it so topK means topK real neighbors, matching annIvf/cosineTopk
@@ -1268,25 +1249,15 @@ object Vectors {
       .orderBy(col("adc"), col("vec_id")).limit(10)
   }
 
-  /** Build the PERSISTED fixed-centroid IVF layout — the at-rest twin of
-    * [[annIvfFixed]] (r10 verdict #1's machinery): every vector is
-    * quantized to the exact integer grid (⌊v·1000⌋, [[quantizeFixed]]) and
-    * landed under its nearest pinned [[fixedCellEntry]] cell as a `cell=`
-    * partition dir. Because assignment is pure Long arithmetic (no trained
-    * codebook), the ENTIRE persisted layout is engine-replayable — what
-    * lets the fixed indexed-hybrid key hash-check its at-rest serving path
-    * end to end where the trained [[writeIvfIndex]] family stays rows-only.
-    * Scale shape is identical to the trained layout: one assignment map
-    * over the vectors, a probe reads nProbe/[[IvfFixedCells]] of the data
-    * via directory-level partition pruning. */
-  def writeIvfFixedIndex(s: SparkSession, d: String, outDir: String): Unit =
-    ivfFixedRowsOf(Tables.embeddings(s, d))
-      .write.mode("overwrite").partitionBy("cell").parquet(outDir)
-
-  /** The fixed-cell row encoder shared by build and append — a pure
-    * function of the vector (pinned codebook), so appended rows are
-    * bit-identical to what a fresh build would emit for them. */
-  private def ivfFixedRowsOf(df: DataFrame): DataFrame = {
+  /** [[Index.IvfFixed]]'s encoder — the at-rest twin of [[annIvfFixed]]:
+    * every vector quantized to the exact integer grid (⌊v·1000⌋,
+    * [[quantizeFixed]]) under its nearest pinned [[fixedCellEntry]] cell.
+    * Assignment is pure Long arithmetic (no trained codebook), so the
+    * ENTIRE persisted layout is engine-replayable — what lets the fixed
+    * indexed-hybrid key hash-check its at-rest serving path end to end
+    * where the trained [[Index.Ivf]] stays rows-only — and appended rows
+    * are bit-identical to what a fresh build would emit for them. */
+  private[operators] def ivfFixedRowsOf(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("vec_id"), vec.as("v"))
@@ -1298,18 +1269,10 @@ object Vectors {
       .toDF("vec_id", "q", "cell")
   }
 
-  /** Fixed-IVF member of the index-append family: pure-function encode,
-    * partition-append into the pinned cell dirs. */
-  def appendIvfFixedIndex(s: SparkSession, indexDir: String, batch: DataFrame): Unit =
-    IndexLease.withLease(s, s"$indexDir/_lease") {
-      ivfFixedRowsOf(batch)
-        .write.mode("append").partitionBy("cell").parquet(indexDir)
-    }
-
   /** Query the fixed IVF layout: directory-pruned scan of the probe's
     * `nProbe` nearest pinned cells (integer L2, tie → lower cell), exact
     * integer L2 rank by (d2 asc, vec_id asc) — the [[annIvfFixed]]
-    * arithmetic served from the persisted [[writeIvfFixedIndex]] dirs. */
+    * arithmetic served from the persisted [[Index.IvfFixed]] dirs. */
   def queryIvfFixedIndex(s: SparkSession, indexDir: String, probe: Array[Double],
       topK: Int, nProbe: Int = 4, excludeId: Option[Long] = None): DataFrame = {
     val spark = s
@@ -1317,8 +1280,8 @@ object Vectors {
     val pq = quantizeFixed(probe)
     val cells = fixedCellsTopP(pq, nProbe).toSeq
     val bc = spark.sparkContext.broadcast(pq)
-    val scan = spark.read.parquet(indexDir)
-      .where(col("cell").isin(cells.map(Integer.valueOf): _*))
+    val scan = Index.dropTombstoned(s, indexDir, spark.read.parquet(indexDir)
+        .where(col("cell").isin(cells.map(Integer.valueOf): _*)), "vec_id")
       .select(col("vec_id"), col("q"))
       .as[(Long, Array[Long])]
     excludeId.fold(scan)(id => scan.filter(_._1 != id))
@@ -1332,19 +1295,13 @@ object Vectors {
       .orderBy(col("d2"), col("vec_id")).limit(topK)
   }
 
-  /** Build the PERSISTED fixed-codebook PQ codes table — the at-rest twin
-    * of [[annPqFixed]]: each vector encoded per subspace against the pinned
+  /** [[Index.PqFixed]]'s encoder — the at-rest twin of [[annPqFixed]]:
+    * each vector encoded per subspace against the pinned
     * [[fixedCodebookEntry]] codebook (integer L2 argmin, tie → lower k) to
     * [[PqM]] one-byte codes. The 8-byte-per-vector table is the 32×-less-
     * I/O scan body of the PQ family, here with NO trained state, so an ADC
     * probe over it is exact Long arithmetic both engines replay. */
-  def writePqFixedIndex(s: SparkSession, d: String, outDir: String): Unit =
-    pqFixedCodesOf(Tables.embeddings(s, d))
-      .write.mode("overwrite").parquet(s"$outDir/codes")
-
-  /** The fixed-PQ code encoder shared by build and append (pure function
-    * of the vector — same contract as [[ivfFixedRowsOf]]). */
-  private def pqFixedCodesOf(df: DataFrame): DataFrame = {
+  private[operators] def pqFixedCodesOf(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("vec_id"), vec.as("v"))
@@ -1373,13 +1330,6 @@ object Vectors {
       .toDF("vec_id", "codes")
   }
 
-  /** Fixed-PQ member of the index-append family. */
-  def appendPqFixedIndex(s: SparkSession, indexDir: String, batch: DataFrame): Unit =
-    IndexLease.withLease(s, s"$indexDir/_lease") {
-      pqFixedCodesOf(batch)
-        .write.mode("append").parquet(s"$indexDir/codes")
-    }
-
   /** ADC probe over the persisted fixed-codebook codes table: the probe's
     * integer lookup tables t(m)(k) = Σ_j (q_j − c_{m,k,j})² broadcast to a
     * scan of the 8-byte codes rows, ranked by (adc asc, vec_id asc) — the
@@ -1399,7 +1349,8 @@ object Vectors {
       t
     }
     val bc = spark.sparkContext.broadcast(tables)
-    val codes = spark.read.parquet(s"$indexDir/codes").as[(Long, Array[Byte])]
+    val codes = Index.dropTombstoned(s, indexDir, spark.read.parquet(s"$indexDir/codes"), "vec_id")
+      .as[(Long, Array[Byte])]
     excludeId.fold(codes)(id => codes.filter(_._1 != id))
       .map { case (id, cs) =>
         val t = bc.value
@@ -1499,14 +1450,14 @@ object Vectors {
     star.union(inter)
   }
 
-  /** The persisted PQ `codes` table layout ([[writePqIndex]],
-    * [[appendPqIndex]]): vec_id and its M byte codes. */
+  /** The persisted PQ `codes` table layout ([[Index.Pq]]): vec_id and its
+    * M byte codes. */
   private[graft] val PqCodesSchema: StructType =
     StructType.fromDDL("vec_id BIGINT, codes BINARY")
 
   /** The PQ codebook sidecar (`_pq_codebook`: m, k, centroid) of a PQ or
     * IVFADC index. */
-  private def writePqCodebook(s: SparkSession, cb: Array[Array[Array[Double]]],
+  private[operators] def writePqCodebook(s: SparkSession, cb: Array[Array[Array[Double]]],
       indexDir: String): Unit = {
     import s.implicits._
     cb.zipWithIndex.flatMap { case (sub, m) =>
@@ -1524,37 +1475,24 @@ object Vectors {
     Array.tabulate(PqM)(m => rows.filter(_._1 == m).sortBy(_._2).map(_._3).toArray)
   }
 
-  /** Build a PERSISTED PQ index: codes table (vec_id + M byte codes — the
-    * 32×-compressed scan body) and a `_pq_codebook` sidecar (m, k,
-    * centroid), optionally alongside the full vectors for exact refinement.
-    * The at-rest twin of [[annPq]], like [[writeIvfIndex]] is of
-    * [[annIvf]]. */
-  def writePqIndex(s: SparkSession, d: String, outDir: String): Unit = {
-    val spark = s
+  /** [[Index.Pq]]'s encoder: (vec_id, M byte codes) of every vector
+    * against sub-codebooks `cb` — the 32×-compressed scan body. */
+  private[operators] def pqRowsOf(rows: DataFrame, cb: Array[Array[Array[Double]]]): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    val edf = Tables.embeddings(s, d).select(col("vec_id"), vec.as("v"))
-    val cb = trainPq(codebookSample(edf))
     val bc = spark.sparkContext.broadcast(cb)
-    edf.as[(Long, Array[Double])]
+    vectorsOf(rows).as[(Long, Array[Double])]
       .map { case (id, v) => (id, pqEncode(bc.value, v).map(_.toByte)) }
       .toDF("vec_id", "codes")
-      .write.mode("overwrite").parquet(s"$outDir/codes")
-    writePqCodebook(s, cb, outDir)
   }
 
-  /** PQ member of the index-append family: encode a batch against the
-    * PERSISTED `_pq_codebook` (pinned at append time — the
-    * [[appendIvfIndex]] contract) and append its 8-byte code rows. */
+  /** [[Index.Pq]]'s build over dataset `d` into `outDir`. */
+  def writePqIndex(s: SparkSession, d: String, outDir: String): Unit = Index.Pq.build(s, d, outDir)
+
+  /** [[Index.Pq]]'s append: `batch` (vec_id, embedding) encoded against the
+    * persisted `_pq_codebook`. */
   def appendPqIndex(s: SparkSession, indexDir: String, batch: DataFrame): Unit =
-    IndexLease.withLease(s, s"$indexDir/_lease") {
-      val spark = s
-      import spark.implicits._
-      val bc = spark.sparkContext.broadcast(pqCodebook(s, indexDir))
-      batch.select(col("vec_id"), vec.as("v")).as[(Long, Array[Double])]
-        .map { case (id, v) => (id, pqEncode(bc.value, v).map(_.toByte)) }
-        .toDF("vec_id", "codes")
-        .write.mode("append").parquet(s"$indexDir/codes")
-    }
+    Index.Pq.append(s, indexDir, batch)
 
   /** Query a persisted PQ index: ADC over the compact codes table (the
     * only full scan — M bytes per row), then exact refinement reads ONLY
@@ -1570,7 +1508,7 @@ object Vectors {
     import spark.implicits._
     val tables = adcTables(pqCodebook(s, indexDir), probe)
     val bcT = spark.sparkContext.broadcast(tables)
-    val codes = dropTombstoned(s, indexDir,
+    val codes = Index.dropTombstoned(s, indexDir,
         spark.read.schema(PqCodesSchema).parquet(s"$indexDir/codes"), "vec_id")
       .as[(Long, Array[Byte])]
     val scored = excludeId.fold(codes)(id => codes.filter(_._1 != id))
@@ -1598,227 +1536,6 @@ object Vectors {
       .select(col("v")).as[Array[Double]].head()
   }
 
-  /** Memoized per-(session, dataset, fingerprint) index builds for the
-    * AT-REST ANN suite keys: a 100 TB similarity-search service builds its
-    * index once per corpus VINTAGE and serves queries against it. The
-    * first invocation per vintage either ADOPTS a committed index whose
-    * `_fp` sidecar matches the dataset fingerprint (cross-session /
-    * cross-process reuse — a fresh session no longer pays a rebuild for an
-    * unchanged corpus) or builds one; every later call only queries. The
-    * fingerprint key (ADVICE r12) makes an in-place dataset rewrite a
-    * rebuild instead of a silent stale hit. */
-  private val indexBuiltAt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, String, Long)]()
-
-  /** The committed vintage marker of an index dir, None when absent (a
-    * pre-sidecar layout or no index at all → build). */
-  private def committedFpOf(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path): Option[Long] = {
-    val f = new org.apache.hadoop.fs.Path(target, "_fp")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(java.lang.Long.parseUnsignedLong(
-        new String(in.readAllBytes(), "UTF-8").trim, 16))
-      catch { case _: Exception => None }
-      finally in.close()
-    }
-  }
-
-  /** How an index catches up to a new corpus vintage (VERDICT r13 #1):
-    * restamp (the delta never touched this index's input table), append
-    * (pure append of the input table — Θ(batch) through the kind's append
-    * verb), or the full rebuild fallback for in-place changes. */
-  private sealed trait VintageDelta
-  private case object VintageRestamp extends VintageDelta
-  private final case class VintageAppend(rels: Seq[String]) extends VintageDelta
-  private case object VintageRebuild extends VintageDelta
-
-  /** Diff the committed vintage's manifest against the current snapshot.
-    * Append-only means every old data file is intact (same length AND
-    * mtime — an in-place rewrite of any file forces the rebuild) and the
-    * new files are plain leaves (a partition-valued intermediate dir
-    * would lose its hive column on a direct file read → rebuild). */
-  private def classifyDelta(old: Seq[DataFp.Entry], cur: Seq[DataFp.Entry],
-      table: String): VintageDelta = {
-    val curMap = cur.map(e => e.rel -> e).toMap
-    if (!old.forall(e => curMap.get(e.rel).contains(e))) VintageRebuild
-    else {
-      val oldRels = old.map(_.rel).toSet
-      val added = cur.filterNot(e => oldRels.contains(e.rel)).map(_.rel)
-      val rel = added.filter(_.startsWith(table + "/"))
-      if (rel.isEmpty) VintageRestamp
-      else if (rel.exists(_.split('/').dropRight(1).exists(_.contains("="))))
-        VintageRebuild
-      else VintageAppend(rel)
-    }
-  }
-
-  /** The input table + append verb an [[ensureIndex]] kind evolves with.
-    * `append` receives the DELTA rows read from exactly the new files and
-    * must reproduce what the full build would have added for them — the
-    * screen kinds re-apply the build's batch-source exclusion so an
-    * appended index stays bit-equal to a fresh one. */
-  private[graft] final case class IndexAppendPlan(table: String,
-      append: (SparkSession, String, DataFrame) => Unit)
-
-  private def atRestOnly(b: DataFrame): DataFrame =
-    b.where(col("source") =!= MinhashBatchSource)
-
-  /** Every ensureIndex kind evolves by append: the six screen layouts
-    * through their existing verbs (with the build's source filter), the
-    * keyword index unfiltered (its build covers the whole corpus), and the
-    * five ANN layouts by encoding the delta against the PERSISTED
-    * codebooks (fixed codebooks are pure functions; trained ones are
-    * pinned at append time — retraining stays a deliberate offline
-    * rebuild, as in any IVF serving system). */
-  private[graft] lazy val appendPlans: Map[String, IndexAppendPlan] = Map(
-    "minhash" -> IndexAppendPlan("documents.parquet",
-      (s, dir, b) => appendMinhashIndex(s, dir, atRestOnly(b))),
-    "simhash" -> IndexAppendPlan("documents.parquet",
-      (s, dir, b) => appendSimhashIndex(s, dir, atRestOnly(b))),
-    "dhash" -> IndexAppendPlan("documents.parquet",
-      (s, dir, b) => Multimodal.appendDhashIndex(s, dir, atRestOnly(b))),
-    "afp" -> IndexAppendPlan("documents.parquet",
-      (s, dir, b) => Audio.appendAfpIndex(s, dir, atRestOnly(b))),
-    "vsig" -> IndexAppendPlan("documents.parquet",
-      (s, dir, b) => Video.appendVsigIndex(s, dir, atRestOnly(b))),
-    Search.KeywordKind -> IndexAppendPlan("documents.parquet",
-      (s, dir, b) => Search.appendKeywordIndex(s, dir, b)),
-    "ivf" -> IndexAppendPlan("embeddings.parquet",
-      (s, dir, b) => appendIvfIndex(s, dir, b)),
-    "pq" -> IndexAppendPlan("embeddings.parquet",
-      (s, dir, b) => appendPqIndex(s, dir, b)),
-    "ivfpq" -> IndexAppendPlan("embeddings.parquet",
-      (s, dir, b) => appendIvfPqIndex(s, dir, b)),
-    "ivf_fixed" -> IndexAppendPlan("embeddings.parquet",
-      (s, dir, b) => appendIvfFixedIndex(s, dir, b)),
-    "pq_fixed" -> IndexAppendPlan("embeddings.parquet",
-      (s, dir, b) => appendPqFixedIndex(s, dir, b)))
-
-  /** The committed vintage's manifest, None when absent (pre-r14 layout,
-    * no index, or a stamp stripped by [[clearVintage]] before a crashed
-    * append — all of which mean "rebuild"). */
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path): Option[Seq[DataFp.Entry]] = {
-    val f = new org.apache.hadoop.fs.Path(target, "_manifest")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(in.readAllBytes(), "UTF-8").linesIterator
-        .filter(_.nonEmpty).map { line =>
-          val Array(len, mtime, rel) = line.split("\t", 3)
-          DataFp.Entry(rel, java.lang.Long.parseLong(len, 16),
-            java.lang.Long.parseLong(mtime, 16))
-        }.toSeq)
-      catch { case _: Exception => None }
-      finally in.close()
-    }
-  }
-
-  /** Stamp a committed vintage: `_manifest` BEFORE `_fp`, so whenever the
-    * fp sidecar exists its manifest does too (readers key on `_fp`). */
-  private def stampVintage(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path, fp: Long,
-      manifest: Seq[DataFp.Entry]): Unit = {
-    val mOut = fs.create(new org.apache.hadoop.fs.Path(target, "_manifest"), true)
-    mOut.writeBytes(manifest.map(e =>
-      s"${java.lang.Long.toHexString(e.len)}\t${java.lang.Long.toHexString(e.mtime)}\t${e.rel}")
-      .mkString("", "\n", "\n"))
-    mOut.close()
-    val fpOut = fs.create(new org.apache.hadoop.fs.Path(target, "_fp"), true)
-    fpOut.writeBytes(java.lang.Long.toHexString(fp))
-    fpOut.close()
-  }
-
-  /** Strip the vintage stamp (`_fp` FIRST — the reverse of
-    * [[stampVintage]]'s order) so a crash mid-mutation leaves an unstamped
-    * index the next call REBUILDS, never one it double-appends into. */
-  private def clearVintage(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path): Unit = {
-    fs.delete(new org.apache.hadoop.fs.Path(target, "_fp"), false)
-    fs.delete(new org.apache.hadoop.fs.Path(target, "_manifest"), false)
-  }
-
-  private[graft] def ensureIndex(s: SparkSession, kind: String, d: String)
-      (build: String => Unit): String = {
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val path = s"$wh/graft_index/${kind}_" + d.replaceAll("[^A-Za-z0-9._-]", "_")
-    val (fp, manifest) = DataFp.snapshot(s, d)
-    val key = (System.identityHashCode(s), path, fp)
-    if (!indexBuiltAt.contains(key))
-      indexBuiltAt.synchronized {
-        if (!indexBuiltAt.contains(key)) {
-          val conf = s.sparkContext.hadoopConfiguration
-          val target = new org.apache.hadoop.fs.Path(path)
-          val fs = target.getFileSystem(conf)
-          // Cross-process commit protocol, r13 form: the rename race of the
-          // r12 protocol was not atomic (LocalFileSystem rename onto an
-          // existing dir copies the loser's staging INTO the winner's index;
-          // HDFS moves it under — ADVICE r12), so commits now serialize on
-          // an exclusive-create lock file ([[IndexLease]]). Inside the
-          // lease: adopt a committed index whose `_fp` matches; else (r14,
-          // VERDICT r13 #1) diff the committed `_manifest` against the
-          // current snapshot and EVOLVE the vintage — restamp when the
-          // delta never touched this kind's input table, route a pure
-          // append of it through the kind's append verb at Θ(batch) — and
-          // only rebuild (into a private `__build_` staging sibling,
-          // vintage stamped, stale target moved aside, staging renamed in)
-          // when files changed in place or no manifest exists. A crashed
-          // builder leaves only an orphaned `__build_*` dir or a stale
-          // lease (taken over after [[IndexLease.StaleMs]]); a crashed
-          // APPEND leaves an unstamped index ([[clearVintage]] runs first)
-          // that the next call rebuilds — never a half-written or
-          // double-appended committed path.
-          if (committedFpOf(fs, target).contains(fp)) ()
-          else IndexLease.withLease(s, s"${path}__lock") {
-            if (!committedFpOf(fs, target).contains(fp)) {
-              val delta = (appendPlans.get(kind), readManifest(fs, target)) match {
-                case (Some(plan), Some(old)) =>
-                  classifyDelta(old, manifest, plan.table)
-                case _ => VintageRebuild
-              }
-              delta match {
-                case VintageRestamp =>
-                  System.err.println(s"[graft] ensureIndex($kind): corpus " +
-                    "delta is outside this index's input table — restamping " +
-                    s"vintage ${java.lang.Long.toHexString(fp)} without a rebuild")
-                  stampVintage(fs, target, fp, manifest)
-                case VintageAppend(rels) =>
-                  System.err.println(s"[graft] ensureIndex($kind): append-only " +
-                    s"corpus delta (${rels.length} new files) — appending at " +
-                    "Θ(batch) instead of rebuilding")
-                  clearVintage(fs, target)
-                  appendPlans(kind).append(s, path,
-                    s.read.parquet(rels.map(r => s"$d/$r"): _*))
-                  stampVintage(fs, target, fp, manifest)
-                case VintageRebuild =>
-                  val tag = java.util.UUID.randomUUID().toString.take(8)
-                  val tmp = new org.apache.hadoop.fs.Path(s"${path}__build_$tag")
-                  build(tmp.toString)
-                  stampVintage(fs, tmp, fp, manifest)
-                  val old = new org.apache.hadoop.fs.Path(s"${path}__replaced_$tag")
-                  if (fs.exists(target)) fs.rename(target, old)
-                  if (!fs.rename(tmp, target)) fs.delete(tmp, true)
-                  fs.delete(old, true)
-                  // belt-and-suspenders (ADVICE r12): if a rename fallback ever
-                  // nested a staging dir INSIDE the committed index, a stray
-                  // non-underscore `__build_` child would break partition
-                  // discovery — detect and remove it
-                  org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(target))
-                    .filter(_.getName.contains("__build_"))
-                    .foreach(p => fs.delete(p, true))
-              }
-            }
-          }
-          // a rewritten dataset supersedes the old vintage's memo entries
-          indexBuiltAt.removeIf(k => k._1 == key._1 && k._2 == key._2 && k._3 != fp)
-          indexBuiltAt.add(key)
-        }
-      }
-    path
-  }
-
   // ---------------------------------------------------------------------
   // Bounded-contract graduation of the trained ANN keys (r11 verdict #1,
   // the ref_approx_distinct precedent): FP-order k-means makes the trained
@@ -1828,7 +1545,7 @@ object Vectors {
   // arithmetic the green q_cosine_topk oracle already certifies) and a
   // recall_ok boolean = |ann-top10 ∩ exact-top10| ≥ [[AnnRecallBar]],
   // which the oracle pins TRUE. The exact referee is collected once per
-  // (session, dataset) — 10 rows of referee metadata, the ensureIndex
+  // (session, dataset) — 10 rows of referee metadata, the Index.ensure
   // memo discipline — so the at-rest serving keys keep their index-scan
   // cost on repeated passes.
   // ---------------------------------------------------------------------
@@ -1923,7 +1640,7 @@ object Vectors {
     * runs. Rows-only by the same declaration as q_ann_ivf (FP-order
     * k-means); VectorSpec pins persisted ≡ in-query. */
   private[graft] val annIvfAtRestRaw: Q = (s, d) => {
-    val idx = ensureIndex(s, "ivf", d)(p => writeIvfIndex(s, d, p))
+    val idx = Index.ensure(s, Index.Ivf, d)
     queryIvfIndex(s, idx, probeVector(s, d), excludeId = Some(0L))
   }
 
@@ -1933,7 +1650,7 @@ object Vectors {
     * [[annIvfAtRest]], timed on index-scan cost only after the memoized
     * first build. */
   private[graft] val annPqAtRestRaw: Q = (s, d) => {
-    val idx = ensureIndex(s, "pq", d)(p => writePqIndex(s, d, p))
+    val idx = Index.ensure(s, Index.Pq, d)
     queryPqIndex(s, d, idx, probeVector(s, d), excludeId = Some(0L))
   }
 
@@ -2025,59 +1742,31 @@ object Vectors {
       .select(col("vec_id"), round(col("cos"), 4).as("cos_r"))
   }
 
-  /** The persisted IVFADC index layout ([[writeIvfPqIndex]],
-    * [[appendIvfPqIndex]]): (vec_id, residual codes) rows under `cluster=`
-    * dirs. */
+  /** The persisted IVFADC index layout ([[Index.IvfPq]]): (vec_id,
+    * residual codes) rows under `cluster=` dirs. */
   private[graft] val IvfPqSchema: StructType =
     StructType.fromDDL("vec_id BIGINT, codes BINARY, cluster INT")
 
-  /** Build a PERSISTED IVFADC index: hive-partitioned by coarse cell (the
-    * partition-pruned scan body is vec_id + 8 residual-code bytes — both
-    * index wins at once: read nProbe/k of the data AND 32× less of it),
-    * with `_codebook` (coarse) and `_pq_codebook` (residual) sidecars. */
-  def writeIvfPqIndex(s: SparkSession, d: String, outDir: String): Unit = {
-    val spark = s
+  /** [[Index.IvfPq]]'s encoder: each vector under its nearest coarse cell
+    * of `cents`, its residual x − c(x) PQ-encoded against `cb` — the
+    * partition-pruned scan body is vec_id + 8 residual-code bytes, both
+    * index wins at once: read nProbe/k of the data AND 32× less of it. */
+  private[operators] def ivfPqRowsOf(rows: DataFrame, cents: Array[Array[Double]],
+      cb: Array[Array[Array[Double]]]): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    val edf = Tables.embeddings(s, d).select(col("vec_id"), vec.as("v"))
-    val (cents, cn, cbR) = trainIvfPq(edf)
-    val bc = spark.sparkContext.broadcast((cents, cn, cbR))
-    edf.as[(Long, Array[Double])]
+    val bc = spark.sparkContext.broadcast((cents, cents.map(normA), cb))
+    vectorsOf(rows).as[(Long, Array[Double])]
       .map { case (id, v) =>
-        val (cs, csn, cb) = bc.value
+        val (cs, csn, cbR) = bc.value
         val cell = nearest(cs, csn, v, normA(v))
         val cent = cs(cell)
         val r = new Array[Double](v.length)
         var i = 0; while (i < v.length) { r(i) = v(i) - cent(i); i += 1 }
-        (cell, id, pqEncode(cb, r).map(_.toByte))
+        (cell, id, pqEncode(cbR, r).map(_.toByte))
       }
       .toDF("cluster", "vec_id", "codes")
-      .write.mode("overwrite").partitionBy("cluster").parquet(outDir)
-    writeIvfCodebook(s, cents, outDir)
-    writePqCodebook(s, cbR, outDir)
   }
-
-  /** IVFADC member of the index-append family: coarse-quantize against the
-    * persisted `_codebook`, PQ-encode the residual against the persisted
-    * `_pq_codebook` (both pinned at append time), partition-append into
-    * the existing cluster dirs. */
-  def appendIvfPqIndex(s: SparkSession, indexDir: String, batch: DataFrame): Unit =
-    IndexLease.withLease(s, s"$indexDir/_lease") {
-      val spark = s
-      import spark.implicits._
-      val cents = ivfCodebook(s, indexDir)
-      val bc = spark.sparkContext.broadcast((cents, cents.map(normA), pqCodebook(s, indexDir)))
-      batch.select(col("vec_id"), vec.as("v")).as[(Long, Array[Double])]
-        .map { case (id, v) =>
-          val (cs, csn, cb) = bc.value
-          val cell = nearest(cs, csn, v, normA(v))
-          val cent = cs(cell)
-          val r = new Array[Double](v.length)
-          var i = 0; while (i < v.length) { r(i) = v(i) - cent(i); i += 1 }
-          (cell, id, pqEncode(cb, r).map(_.toByte))
-        }
-        .toDF("cluster", "vec_id", "codes")
-        .write.mode("append").partitionBy("cluster").parquet(indexDir)
-    }
 
   /** Query a persisted IVFADC index: rank cells from the k-row coarse
     * sidecar, scan ONLY the probed cells' code files (partition pruning ×
@@ -2093,7 +1782,7 @@ object Vectors {
     val tables = adcTables(pqCodebook(s, indexDir), probe)
     val cellConst = coarse.map(c => dotA(probe, c))
     val bcT = spark.sparkContext.broadcast((tables, cellConst))
-    val codes = dropTombstoned(s, indexDir, spark.read.schema(IvfPqSchema).parquet(indexDir)
+    val codes = Index.dropTombstoned(s, indexDir, spark.read.schema(IvfPqSchema).parquet(indexDir)
         .where(col("cluster").isin(chosen: _*)), "vec_id")
       .select(col("vec_id"), col("codes"), col("cluster"))
       .as[(Long, Array[Byte], Int)]
@@ -2116,7 +1805,7 @@ object Vectors {
     * compressed code scan + candidate point reads — the cheapest serving
     * shape the engine offers. */
   private[graft] val annIvfPqAtRestRaw: Q = (s, d) => {
-    val idx = ensureIndex(s, "ivfpq", d)(p => writeIvfPqIndex(s, d, p))
+    val idx = Index.ensure(s, Index.IvfPq, d)
     queryIvfPqIndex(s, d, idx, probeVector(s, d), excludeId = Some(0L))
   }
 
@@ -2354,61 +2043,11 @@ object Vectors {
     * everything else is the at-rest corpus the index covers. */
   val MinhashBatchSource = "src9"
 
-  /** Persist the at-rest MinHash signature index: `banded/` — one row per
-    * (band, key, doc_id), written `partitionBy(band)` so a probe batch's
-    * band join reads co-located band buckets; `sigs/` — (doc_id, sig) for
-    * the exact agreement verify. Built ONCE per corpus; afterwards an
-    * incoming batch pays only ITS OWN signature pass — the at-rest corpus
-    * is never re-tokenized, re-hashed, or re-scanned beyond the banded
-    * probe, which is the whole point of an at-rest near-dup index at
-    * 100 TB (signatures are ~300 bytes/doc; the text never moves). */
-  def writeMinhashIndex(s: SparkSession, d: String, dir: String,
-      batchSource: String = MinhashBatchSource): Unit = {
-    val sigs = minhashSigsOf(
-        Tables.documents(s, d).where(col("source") =!= batchSource))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "key")))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/banded")
-    sigs.select(col("doc_id"), col("sig"))
-      .write.mode("overwrite").parquet(s"$dir/sigs")
-    sigs.unpersist()
-  }
-
-  /** Index MAINTENANCE (VERDICT r7 #3): merge a screened batch INTO the
-    * persisted [[writeMinhashIndex]] layout with a partition-APPEND — no
-    * rebuild, no read of the existing index. The batch pays exactly its
-    * own signature pass (the same one its screen already ran); its band
-    * rows land as new files under their existing `band=` partition dirs
-    * and its signatures append to `sigs/`. This closes the production
-    * ingest loop — screen batch N → append its verified-novel docs →
-    * batch N+1's screen sees them as at-rest — which previously required
-    * a full index rebuild per batch. Idempotence contract (spec-pinned):
-    * re-screening an appended batch returns all-dup with perfect 32/32
-    * self-agreement. `batch` needs (doc_id, text); the caller decides
-    * WHICH rows to append (typically the is_dup = 0 sliver of the screen
-    * verdict, or the whole batch when duplicates should also become
-    * at-rest). */
-  def appendMinhashIndex(s: SparkSession, dir: String, batch: DataFrame): Unit =
-    // maintenance verbs serialize on the index lease (r12 verdict #2):
-    // concurrent Spark jobs appending one path interleave partitions and
-    // stomp each other's `_temporary` committer staging
-    IndexLease.withLease(s, s"$dir/_lease") {
-      // r16: batch-sized input — raw signing (see [[simhashSigsRaw]] note)
-      val sigs = minhashSigsRaw(batch)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sigs.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "key")))
-        .write.mode("append").partitionBy("band").parquet(s"$dir/banded")
-      sigs.select(col("doc_id"), col("sig"))
-        .write.mode("append").parquet(s"$dir/sigs")
-      sigs.unpersist()
-      ()
-    }
-
   /** AT-REST incremental near-dup screen — the MinHash analogue of the
     * persisted-ANN serving keys: "is this incoming document a near-dup of
     * anything we already hold?" answered WITHOUT touching the at-rest
     * text. The incoming batch (source [[MinhashBatchSource]]) is signed
-    * fresh; its band keys probe the persisted [[writeMinhashIndex]] layout
+    * fresh; its band keys probe the persisted [[Index.Minhash]] layout
     * (memoized build, like the ANN indexes); candidates sharing ≥1 band
     * are verified by exact signature agreement m ≥ 16/32 (the SAME integer
     * floor as the bounded verdict family, est. Jaccard ≥ 0.5); the best
@@ -2420,14 +2059,14 @@ object Vectors {
     * to mixed (batch × at-rest) pairs — the banding is part of the
     * contract and is reproduced, not approximated away. */
   val minhashScreenAtRest: Q = served((s, d) => {
-    val idx = ensureIndex(s, "minhash", d)(p => writeMinhashIndex(s, d, p))
+    val idx = Index.ensure(s, Index.Minhash, d)
     minhashScreenOf(s, idx,
       Tables.documents(s, d).where(col("source") === MinhashBatchSource))
   })
 
   /** The screen kernel over an ARBITRARY batch frame against an ARBITRARY
-    * persisted [[writeMinhashIndex]] layout — extracted so the production
-    * ingest loop (screen → [[appendMinhashIndex]] the verified-novel batch
+    * persisted [[Index.Minhash]] layout — extracted so the production
+    * ingest loop (screen → [[IndexKind.append]] the verified-novel batch
     * → screen the next batch) is a first-class surface, not just the
     * fixed-source suite key. `newDocs` needs (doc_id, text).
     *
@@ -2460,7 +2099,7 @@ object Vectors {
       .agg(min(col("doc_id")).as("prep"), first(col("bands")).as("bands"))
     val probe = probeGroups.select(col("prep"), col("sig").as("sig_n"),
       posexplode(col("bands")).as(Seq("band", "key")))
-    val refSigs = dropTombstoned(s, idx,
+    val refSigs = Index.dropTombstoned(s, idx,
         notOwnBatch(s.read.parquet(s"$idx/sigs")), "doc_id")
       .select(col("doc_id").as("ref_id"), col("sig").as("sig_r"))
     val refBanded = notOwnBatch(s.read.parquet(s"$idx/banded"))
@@ -2645,186 +2284,6 @@ object Vectors {
     }.select(col("doc_id"), col("sim"), col("blocks"))
   }
 
-  /** Persist the at-rest SimHash block index: one row per (block key,
-    * ref_id, signature), written `partitionBy` the pigeonhole band index —
-    * the signature is DENORMALIZED next to the block key so the screen's
-    * Hamming filter runs directly on the probe join's output (before the
-    * pair distinct, the [[simhashPairs]] discipline) with no second
-    * signature join. ~40 bytes × 4 blocks per at-rest doc. */
-  def writeSimhashIndex(s: SparkSession, d: String, dir: String,
-      batchSource: String = MinhashBatchSource): Unit =
-    simhashSigsOf(Tables.documents(s, d).where(col("source") =!= batchSource))
-      .select(col("doc_id").as("ref_id"), col("sim").as("sim_r"),
-        explode(col("blocks")).as("blk"))
-      .withColumn("bandi", shiftright(col("blk"), 32).cast("int"))
-      .write.mode("overwrite").partitionBy("bandi").parquet(s"$dir/blocks")
-
-  /** SimHash twin of [[appendMinhashIndex]]: partition-append a batch's
-    * denormalized (block key, ref_id, signature) rows into the persisted
-    * [[writeSimhashIndex]] layout — same ingest-loop contract and
-    * idempotence spec. */
-  def appendSimhashIndex(s: SparkSession, dir: String, batch: DataFrame): Unit =
-    IndexLease.withLease(s, s"$dir/_lease") {
-      // r16: batch-sized input — raw signing (see [[simhashSigsRaw]] note)
-      simhashSigsRaw(batch)
-        .select(col("doc_id").as("ref_id"), col("sim").as("sim_r"),
-          explode(col("blocks")).as("blk"))
-        .withColumn("bandi", shiftright(col("blk"), 32).cast("int"))
-        .write.mode("append").partitionBy("bandi").parquet(s"$dir/blocks")
-    }
-
-  // ── index lifecycle: logical delete + offline compaction ─────────────
-
-  /** Logical DELETE from a persisted index (takedown / right-to-erasure —
-    * the missing verb of the build → append → screen lifecycle): append
-    * the victim ids to `$dir/_tombstones` — the underscore keeps the
-    * sidecar out of parquet partition discovery (like `_codebook`), which
-    * is mandatory for the ANN layouts whose data rows live at the index
-    * root. Θ(deletes) — no index read, no rewrite; identical on the
-    * minhash / simhash / IVF / PQ / IVFADC layouts and on the
-    * batch-id-partitioned streaming-ingest variants. Readers (the screen
-    * kernels, the streaming screen loads, and the three ANN query paths)
-    * anti-join the tombstone set (broadcast — deletes are rare relative
-    * to the corpus), so a deleted document stops matching IMMEDIATELY;
-    * its physical rows go away at the next [[compactIndex]] — the
-    * delete-then-compact discipline of every production table format
-    * (logical now, physical on the maintenance schedule). */
-  def deleteFromIndex(s: SparkSession, dir: String, ids: DataFrame): Unit =
-    IndexLease.withLease(s, s"$dir/_lease") {
-      ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-        .write.mode("append").parquet(s"$dir/_tombstones")
-    }
-
-  /** The `_tombstones` layout, as [[deleteFromIndex]] writes it. Readers
-    * open it with this schema, so a query on an index with deletes still
-    * builds without a schema-inference job. */
-  private[graft] val TombstoneSchema: StructType = StructType.fromDDL("doc_id BIGINT")
-
-  /** The tombstone set of an index dir, None when none exists. Probed via
-    * the path's Hadoop FileSystem — a `java.io.File` probe is silently
-    * false on hdfs:// / s3a://, which would resurrect every deleted doc
-    * without an error (the Streams.indexExists lesson). */
-  private[graft] def tombstonesOf(
-      s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.isDirectory(p) &&
-        org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(p))
-          .exists(c => !c.getName.startsWith("_")))
-      Some(s.read.schema(TombstoneSchema).parquet(p.toString))
-    else None
-  }
-
-  /** Drop tombstoned rows from an index-reader frame (no-op without
-    * tombstones): broadcast anti-join on the frame's id column. */
-  private[graft] def dropTombstoned(s: SparkSession, dir: String,
-      df: DataFrame, idCol: String): DataFrame = tombstonesOf(s, dir) match {
-    case Some(ts) => df.join(
-      org.apache.spark.sql.functions.broadcast(
-        ts.select(col("doc_id").as(idCol))), Seq(idCol), "left_anti")
-    case None => df
-  }
-
-  /** Offline physical COMPACTION: fold `$dir/_tombstones` into the layout.
-    * Each data subdir is rewritten without the victim rows — staged to a
-    * `__compact_tmp` sibling then swapped by FS rename (the reader-safe
-    * way to overwrite a path this job is also reading) — preserving
-    * whatever partition layout the subdir carries (band / bandi /
-    * batch_id / cluster), then the tombstones are cleared. Cost is
-    * Θ(index) over signature rows (~300 B/doc, never text) and
-    * deliberate: compaction is the scheduled-maintenance half of
-    * delete-then-compact, not a per-delete tax. (Partition pruning cannot
-    * narrow the minhash rewrite — every doc holds a row in EVERY band
-    * partition by construction — so the full rewrite is the honest
-    * shape.) */
-  def compactIndex(s: SparkSession, dir: String, subdirs: Seq[String]): Unit =
-    IndexLease.withLease(s, s"$dir/_lease") {
-      compactIndexUnguarded(s, dir, subdirs)
-    }
-
-  /** [[compactIndex]] body without the lease — for composite maintenance
-    * verbs (e.g. [[Search.compactKeywordIndex]]) that hold the index lease
-    * across compaction plus their own layout-specific follow-up. */
-  private[operators] def compactIndexUnguarded(s: SparkSession, dir: String,
-      subdirs: Seq[String]): Unit =
-    tombstonesOf(s, dir).foreach { ts =>
-      val conf = s.sparkContext.hadoopConfiguration
-      val t = ts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count() // materialize BEFORE the source dir is cleared below
-      subdirs.foreach { sub =>
-        val live = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-        val fs = live.getFileSystem(conf)
-        if (fs.isDirectory(live)) {
-          val tmp = new org.apache.hadoop.fs.Path(s"$dir/${sub}__compact_tmp")
-          val df = s.read.parquet(live.toString)
-          val idCol =
-            if (df.columns.contains("ref_id")) "ref_id"
-            else if (df.columns.contains("vec_id")) "vec_id"
-            else "doc_id"
-          val retained = df.join(
-            org.apache.spark.sql.functions.broadcast(
-              t.select(col("doc_id").as(idCol))), Seq(idCol), "left_anti")
-          val parts = Seq("band", "bandi", "batch_id", "cluster", "tb", "bb")
-            .filter(df.columns.contains)
-          val w = retained.write.mode("overwrite")
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-            .parquet(tmp.toString)
-          fs.delete(live, true)
-          fs.rename(tmp, live)
-        }
-      }
-      val tp = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-      tp.getFileSystem(conf).delete(tp, true)
-      t.unpersist(blocking = false)
-    }
-
-  /** [[compactIndex]] over the [[writeMinhashIndex]] layout. */
-  def compactMinhashIndex(s: SparkSession, dir: String): Unit =
-    compactIndex(s, dir, Seq("banded", "sigs"))
-
-  /** [[compactIndex]] over the [[writeSimhashIndex]] layout. */
-  def compactSimhashIndex(s: SparkSession, dir: String): Unit =
-    compactIndex(s, dir, Seq("blocks"))
-
-  /** Compaction for the ROOT-partitioned ANN layouts ([[writeIvfIndex]] /
-    * [[writeIvfPqIndex]]), where the `cluster=` data dirs live at the
-    * index root next to `_codebook` sidecars: rewrite the retained rows
-    * into a SIBLING staging dir (a tmp inside the root would be destroyed
-    * by its own swap), then replace only the `cluster=` partition dirs —
-    * sidecars untouched (codebooks are corpus statistics, not rows; a
-    * compaction never retrains, same discipline as [[appendIvfIndex]]). */
-  def compactIvfIndex(s: SparkSession, dir: String): Unit =
-    IndexLease.withLease(s, s"$dir/_lease") {
-    tombstonesOf(s, dir).foreach { ts =>
-      val conf = s.sparkContext.hadoopConfiguration
-      val live = new org.apache.hadoop.fs.Path(dir)
-      val fs = live.getFileSystem(conf)
-      val tmp = new org.apache.hadoop.fs.Path(s"${dir}__compact_tmp")
-      val t = ts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count() // materialize BEFORE the live partitions are replaced
-      val retained = s.read.parquet(dir).join(
-        org.apache.spark.sql.functions.broadcast(
-          t.select(col("doc_id").as("vec_id"))), Seq("vec_id"), "left_anti")
-      retained.write.mode("overwrite").partitionBy("cluster")
-        .parquet(tmp.toString)
-      org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(live))
-        .filter(_.getName.startsWith("cluster="))
-        .foreach(p => fs.delete(p, true))
-      org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(tmp))
-        .filter(_.getName.startsWith("cluster="))
-        .foreach(p => fs.rename(p,
-          new org.apache.hadoop.fs.Path(live, p.getName)))
-      fs.delete(tmp, true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_tombstones"), true)
-      t.unpersist(blocking = false)
-    }
-    }
-
-  /** [[compactIndex]] over the [[writePqIndex]] layout (flat `codes/`
-    * subdir + `_pq_codebook` sidecar). */
-  def compactPqIndex(s: SparkSession, dir: String): Unit =
-    compactIndex(s, dir, Seq("codes"))
-
   /** AT-REST SimHash screen — the pigeonhole twin of
     * [[minhashScreenAtRest]]: the incoming batch (source
     * [[MinhashBatchSource]]) computes its own 64-bit simhashes, probes the
@@ -2834,13 +2293,13 @@ object Vectors {
     * (min Hamming, tie → min ref_id; sentinel distance 64 for clean docs).
     * Output Θ(batch); at-rest text never re-read. */
   val simhashScreenAtRest: Q = served((s, d) => {
-    val idx = ensureIndex(s, "simhash", d)(p => writeSimhashIndex(s, d, p))
+    val idx = Index.ensure(s, Index.Simhash, d)
     simhashScreenOf(s, idx,
       Tables.documents(s, d).where(col("source") === MinhashBatchSource))
   })
 
   /** SimHash twin of [[minhashScreenOf]]: screen an arbitrary batch frame
-    * against a persisted [[writeSimhashIndex]] layout. */
+    * against a persisted [[Index.Simhash]] layout. */
   def simhashScreenOf(s: SparkSession, idx: String, newDocs: DataFrame): DataFrame = {
     // r9 distinct-signature contraction, both sides (sf10 measured the
     // member-level block join at 77.9× wall for 10× data: 16-bit block
@@ -2855,7 +2314,7 @@ object Vectors {
     val probeGroups = sigs.groupBy(col("sim")).agg(first(col("blocks")).as("blocks"))
     val probe = probeGroups
       .select(col("sim").as("sim_n"), explode(col("blocks")).as("blk"))
-    val refs = dropTombstoned(s, idx, s.read.parquet(s"$idx/blocks"), "ref_id")
+    val refs = Index.dropTombstoned(s, idx, s.read.parquet(s"$idx/blocks"), "ref_id")
       .groupBy(col("blk"), col("sim_r")).agg(min(col("ref_id")).as("ref_id"))
     val scored = probe
       .join(refs, Seq("blk"))

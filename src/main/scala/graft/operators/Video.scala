@@ -732,7 +732,7 @@ object Video {
 
   /** Per-doc signature frame — the shared decode+hash pass of
     * [[videoDedup]] and the at-rest screen family. */
-  private def sigFrame(s: SparkSession, docs: DataFrame): DataFrame = {
+  private[operators] def sigFrame(s: SparkSession, docs: DataFrame): DataFrame = {
     val spark = s
     import spark.implicits._
     // r15: decode+hash once per DISTINCT text ([[Contract.perTextOf]])
@@ -744,51 +744,14 @@ object Video {
     }.select(col("doc_id"), col("sig_hi"), col("sig_lo"), col("n_scenes"))
   }
 
-  /** Persist the at-rest video-signature index: one 32-byte (doc_id,
-    * sig_hi, sig_lo, n_scenes) row per at-rest video — the frames never
-    * move again. The video member of the screen-index family, sharing its
-    * lifecycle verbs: [[appendVsigIndex]], [[Vectors.deleteFromIndex]]
-    * (tombstones respected by [[vsigScreenOf]]), and
-    * [[Vectors.compactIndex]] over the `vsigs` subdir. */
-  def writeVsigIndex(s: SparkSession, d: String, dir: String): Unit =
-    sigFrame(s, Tables.documents(s, d)
-        .where(col("source") =!= Vectors.MinhashBatchSource))
-      .write.mode("overwrite").parquet(s"$dir/vsigs")
-
-  /** Partition-append a batch's signature rows — screen → append →
-    * ingest, no rebuild. */
-  def appendVsigIndex(s: SparkSession, dir: String, batch: DataFrame): Unit =
-    IndexLease.withLease(s, s"$dir/_lease") {
-      sigFrame(s, batch).write.mode("append").parquet(s"$dir/vsigs")
-    }
-
-  /** Screen an incoming batch against the at-rest signature index: a
-    * batch video is a dup iff an at-rest video shares its (signature,
-    * scene-count); best match = the min at-rest id. The index side
-    * contracts per signature to its min ref — exact under equality — and
-    * tombstoned ids are dropped before the contraction, so takedowns bite
-    * immediately. Θ(batch) output; at-rest frames never re-decoded. */
-  def vsigScreenOf(s: SparkSession, idx: String, newDocs: DataFrame): DataFrame = {
-    val refs = Vectors.dropTombstoned(s, idx,
-        s.read.parquet(s"$idx/vsigs"), "doc_id")
-      .groupBy(col("sig_hi"), col("sig_lo"), col("n_scenes"))
-      .agg(min(col("doc_id")).as("ref_id"))
-    sigFrame(s, newDocs)
-      .join(refs, Seq("sig_hi", "sig_lo", "n_scenes"), "left")
-      .select(col("doc_id"),
-        col("ref_id").isNotNull.cast("long").as("is_dup"),
-        coalesce(col("ref_id"), lit(-1L)).as("best_match_id"))
-      .orderBy(col("doc_id"))
-  }
-
   /** AT-REST video screen as a suite key — "has this incoming video's
     * perceptual signature been seen before?" against the persisted index
     * (memoized build, the screen-family pattern). With this, all FIVE
     * perceptual/content screens (minhash, simhash, dhash, afp, vsig)
     * have at-rest batch forms. */
   val videoScreenAtRest: Q = Vectors.served((s, d) => {
-    val idx = Vectors.ensureIndex(s, "vsig", d)(p => writeVsigIndex(s, d, p))
-    vsigScreenOf(s, idx, Tables.documents(s, d)
+    val idx = Index.ensure(s, Index.Vsig, d)
+    Index.screenByKey(Index.Vsig, s, idx, Tables.documents(s, d)
       .where(col("source") === Vectors.MinhashBatchSource))
   })
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.operators.Index
 
 /** Structured Streaming variants of the [[graft.operators.Events]] batch
   * pipelines (SURVEY §2.2 streaming family, M4): the same logical
@@ -777,7 +778,7 @@ object Streams {
     * ([[graft.operators.Vectors.minhashScreenAtRest]]) — screen-at-
     * ingestion, the production shape of "is this arriving document a
     * near-dup of anything we already hold?". The persisted
-    * `writeMinhashIndex` layout (memoized build, shared with the batch
+    * [[graft.operators.Index.Minhash]] layout (memoized build, shared with the batch
     * key) is loaded ONCE into two driver maps — (band, key) → candidate
     * ref ids and ref id → signature — and broadcast; each arriving doc
     * then signs ITSELF with the one shared kernel chain
@@ -801,22 +802,21 @@ object Streams {
       maxBroadcastRefs: Long = BroadcastScreenCeiling): Dataset[ScreenVerdict] = {
     import spark.implicits._
     import graft.operators.Vectors
-    val idx = Vectors.ensureIndex(spark, "minhash", sfDir)(p =>
-      Vectors.writeMinhashIndex(spark, sfDir, p))
+    val idx = Index.ensure(spark, Index.Minhash, sfDir)
     // parquet footer count — cheap; decides broadcast vs stream-static
     if (spark.read.parquet(s"$idx/sigs").count() > maxBroadcastRefs)
       return minhashScreenStreamStatic(spark, sfDir, idx)
     // tombstone-filtered loads: a deleted at-rest doc must stop matching
-    // immediately, before any physical compaction (Vectors.deleteFromIndex)
+    // immediately, before any physical compaction (Index.delete)
     val bandMap: Map[(Int, Long), Array[Long]] =
-      Vectors.dropTombstoned(spark, idx,
+      Index.dropTombstoned(spark, idx,
           spark.read.parquet(s"$idx/banded"), "doc_id")
         .select(col("band").cast("int"), col("key"), col("doc_id"))
         .collect()
         .groupBy(r => (r.getInt(0), r.getLong(1)))
         .map { case (k, rs) => k -> rs.map(_.getLong(2)) }
     val sigMap: Map[Long, Array[Long]] =
-      Vectors.dropTombstoned(spark, idx,
+      Index.dropTombstoned(spark, idx,
           spark.read.parquet(s"$idx/sigs"), "doc_id")
         .select(col("doc_id"), col("sig"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
@@ -875,11 +875,11 @@ object Streams {
       idx: String): Dataset[ScreenVerdict] = {
     import spark.implicits._
     import graft.operators.Vectors
-    val banded = Vectors.dropTombstoned(spark, idx,
+    val banded = Index.dropTombstoned(spark, idx,
         spark.read.parquet(s"$idx/banded"), "doc_id")
       .select(col("band").cast("int").as("band"), col("key"),
         col("doc_id").as("ref_id"))
-    val refSigs = Vectors.dropTombstoned(spark, idx,
+    val refSigs = Index.dropTombstoned(spark, idx,
         spark.read.parquet(s"$idx/sigs"), "doc_id")
       .select(col("doc_id").as("ref_id"), col("sig").as("sig_r"))
     val probes = docsStream(spark, sfDir)
@@ -946,13 +946,12 @@ object Streams {
       maxBroadcastRefs: Long = BroadcastScreenCeiling): Dataset[HammingVerdict] = {
     import spark.implicits._
     import graft.operators.Vectors
-    val idx = Vectors.ensureIndex(spark, "simhash", sfDir)(p =>
-      Vectors.writeSimhashIndex(spark, sfDir, p))
+    val idx = Index.ensure(spark, Index.Simhash, sfDir)
     // blocks/ holds 4 rows per at-rest doc
     if (spark.read.parquet(s"$idx/blocks").count() / 4 > maxBroadcastRefs)
       return simhashScreenStreamStatic(spark, sfDir, idx)
     val blockMap: Map[Long, Array[(Long, Long)]] =
-      Vectors.dropTombstoned(spark, idx,
+      Index.dropTombstoned(spark, idx,
           spark.read.parquet(s"$idx/blocks"), "ref_id")
         .select(col("blk"), col("ref_id"), col("sim_r"))
         .collect()
@@ -995,7 +994,7 @@ object Streams {
       idx: String): Dataset[HammingVerdict] = {
     import spark.implicits._
     import graft.operators.Vectors
-    val blocks = Vectors.dropTombstoned(spark, idx,
+    val blocks = Index.dropTombstoned(spark, idx,
         spark.read.parquet(s"$idx/blocks"), "ref_id")
       .select(col("blk"), col("ref_id"), col("sim_r"))
     docsStream(spark, sfDir)
@@ -1038,7 +1037,7 @@ object Streams {
   /** Streaming image screen — the dHash twin of [[minhashScreenStream]]:
     * each arriving doc synthesizes and REALLY decodes its image blob
     * (JDK ImageIO), computes the 64-bit perceptual dHash, and probes the
-    * persisted [[graft.operators.Multimodal.writeDhashIndex]] layout.
+    * persisted [[graft.operators.Index.Dhash]] layout.
     * Under the broadcast ceiling the contracted (hash → min ref) map
     * rides the executors (~24 B per at-rest image); above it the probe
     * left-joins the contracted index as a STATIC side — stateless in
@@ -1049,9 +1048,8 @@ object Streams {
       maxBroadcastRefs: Long = BroadcastScreenCeiling): Dataset[DhashVerdict] = {
     import spark.implicits._
     import graft.operators.{Multimodal, Vectors}
-    val idx = Vectors.ensureIndex(spark, "dhash", sfDir)(p =>
-      Multimodal.writeDhashIndex(spark, sfDir, p))
-    val refs = Vectors.dropTombstoned(spark, idx,
+    val idx = Index.ensure(spark, Index.Dhash, sfDir)
+    val refs = Index.dropTombstoned(spark, idx,
         spark.read.parquet(s"$idx/dhashes"), "doc_id")
       .groupBy(col("dhash_hi"), col("dhash_lo"))
       .agg(min(col("doc_id")).as("ref_id"))
@@ -1085,16 +1083,15 @@ object Streams {
   /** Streaming audio screen — the fingerprint twin of
     * [[dhashScreenStream]]: each arriving clip really decodes its WAV
     * blob, fingerprints its energy profile, and probes the persisted
-    * [[graft.operators.Audio.writeAfpIndex]] layout. Stateless in both
+    * [[graft.operators.Index.Afp]] layout. Stateless in both
     * modes (fingerprint equality yields at most one contracted ref per
     * probe); tombstones respected. */
   def afpScreenStream(spark: SparkSession, sfDir: String,
       maxBroadcastRefs: Long = BroadcastScreenCeiling): Dataset[DhashVerdict] = {
     import spark.implicits._
     import graft.operators.{Audio, Vectors}
-    val idx = Vectors.ensureIndex(spark, "afp", sfDir)(p =>
-      Audio.writeAfpIndex(spark, sfDir, p))
-    val refs = Vectors.dropTombstoned(spark, idx,
+    val idx = Index.ensure(spark, Index.Afp, sfDir)
+    val refs = Index.dropTombstoned(spark, idx,
         spark.read.parquet(s"$idx/fps"), "doc_id")
       .groupBy(col("fingerprint")).agg(min(col("doc_id")).as("ref_id"))
     val probes = docsStream(spark, sfDir)
@@ -1135,9 +1132,8 @@ object Streams {
       maxBroadcastRefs: Long = BroadcastScreenCeiling): Dataset[DhashVerdict] = {
     import spark.implicits._
     import graft.operators.{Vectors, Video}
-    val idx = Vectors.ensureIndex(spark, "vsig", sfDir)(p =>
-      Video.writeVsigIndex(spark, sfDir, p))
-    val refs = Vectors.dropTombstoned(spark, idx,
+    val idx = Index.ensure(spark, Index.Vsig, sfDir)
+    val refs = Index.dropTombstoned(spark, idx,
         spark.read.parquet(s"$idx/vsigs"), "doc_id")
       .groupBy(col("sig_hi"), col("sig_lo"), col("n_scenes"))
       .agg(min(col("doc_id")).as("ref_id"))
@@ -1187,45 +1183,11 @@ object Streams {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestMinhashBatch(batch.sparkSession, idxDir, batch, batchId)
+        Index.Minhash.ingest(batch.sparkSession, idxDir, batch, batchId)
       }
       .start()
 
-  /** The idempotent batch writer behind [[minhashIngestSink]] — exposed so
-    * StreamingSpec can invoke a LITERAL replay (same batchId, same rows,
-    * twice) and pin byte-identical index state.
-    *
-    * The dynamic-overwrite mode rides on the WRITER (`DataFrameWriter
-    * .option`), never the shared session conf — a session-level toggle
-    * races concurrent sinks on one SparkSession (sink A's finally could
-    * restore `static` mid-way through sink B's overwrite, which would then
-    * DELETE every existing batch partition). An all-rejected batch writes
-    * nothing: an empty partitioned overwrite would leave a schema-less
-    * `_SUCCESS`-only directory that breaks every later read, and skipping
-    * is equally idempotent (the replay skips too). */
-  def ingestMinhashBatch(s: SparkSession, idxDir: String, batch: DataFrame,
-      batchId: Long): Unit = {
-    val sigs = graft.operators.Vectors
-      .minhashSigsRaw(batch.select(col("doc_id"), col("text"))) // r16: micro-batch — raw signing
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (!sigs.isEmpty) {
-      sigs.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "key")))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "band")
-        .parquet(s"$idxDir/banded")
-      sigs.select(col("doc_id"), col("sig"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(s"$idxDir/sigs")
-    }
-    sigs.unpersist(blocking = false)
-  }
-
-  /** True iff BOTH halves of a [[ingestMinhashBatch]]-shaped index layout
+  /** True iff BOTH halves of an ingested [[graft.operators.Index.Minhash]] layout
     * exist with data files, via the Hadoop FileSystem of the path (a
     * `java.io.File` probe is silently false on hdfs:// or s3a:// — the
     * very deployments the 100 TB notes describe — which would disable the
@@ -1234,17 +1196,8 @@ object Streams {
     * writes of the first batch self-healing: the replay sees an incomplete
     * index, skips the screen, and rewrites both halves under its own
     * batch partition. */
-  private def indexExists(s: SparkSession, idxDir: String): Boolean = {
-    val conf = s.sparkContext.hadoopConfiguration
-    def hasData(sub: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$idxDir/$sub")
-      val fs = p.getFileSystem(conf)
-      fs.isDirectory(p) &&
-        org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(p))
-          .exists(c => !c.getName.startsWith("_"))
-    }
-    hasData("banded") && hasData("sigs")
-  }
+  private def indexExists(s: SparkSession, idxDir: String): Boolean =
+    Index.Minhash.parts.forall(p => Index.hasData(s, Index.Minhash.path(idxDir, p)))
 
   /** Streaming INCREMENTAL CURATION — the production micro-batch form of
     * the flagship [[graft.operators.CorpusCurate]] pipeline: each arriving
@@ -1257,7 +1210,7 @@ object Streams {
     * dedup (q_exact_dedup's rule), [[graft.operators.Vectors
     * .minhashSigsOf]] + the [[DedupCluster.MinhashRepsMinAgree]] agreement
     * floor (the q_minhash_* family), [[graft.operators.Vectors
-    * .minhashScreenOf]] (the at-rest screen), and [[ingestMinhashBatch]]'s
+    * .minhashScreenOf]] (the at-rest screen), and [[graft.operators.IndexKind.ingest]]'s
     * batch-id-partitioned exactly-once sink discipline.
     *
     * Delivery contract: both writes (accepted docs, index rows) land under
@@ -1321,13 +1274,13 @@ object Streams {
       // E. exactly-once accepted-docs commit + index ingest, both keyed by
       // the batch-id partition (the idempotence key IS the directory name;
       // dynamic overwrite per-WRITER, and an empty batch skips the write —
-      // see the ingestMinhashBatch notes)
+      // see the IndexKind.ingest notes)
       if (!accepted.isEmpty)
         accepted.withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id").parquet(outDir)
-      ingestMinhashBatch(s, idxDir, accepted, batchId)
+      Index.Minhash.ingest(s, idxDir, accepted, batchId)
       accepted.unpersist(blocking = false)
     }
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Audio
+import graft.operators.{Audio, Index}
 
 /** The real-codec audio path: the hand-written WAV encoder must round-trip
   * through the JDK's javax.sound.sampled decoder sample-for-sample (that
@@ -89,20 +89,20 @@ class AudioSpec extends AnyFunSuite {
       .where(col("source") === Vectors.MinhashBatchSource)
     val batchIds = batch.select("doc_id").as[Long].collect().toSeq
     val idx = java.nio.file.Files.createTempDirectory("afpidx").toString
-    Audio.writeAfpIndex(spark, d, idx)
+    Index.Afp.build(spark, d, idx)
     val rows0 = spark.read.parquet(s"$idx/fps").count()
-    def screen() = Audio.afpScreenOf(spark, idx, batch).collect()
+    def screen() = Index.screenByKey(Index.Afp, spark, idx, batch).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
     val v1 = screen()
     assert(v1.size == batchIds.size)
-    Audio.appendAfpIndex(spark, idx, batch)
+    Index.Afp.append(spark, idx, batch)
     val v2 = screen()
     assert(v2.forall { case (id, dup, ref) => dup == 1L && ref <= id })
-    Vectors.deleteFromIndex(spark, idx, batchIds.toDF("doc_id"))
+    Index.delete(spark, idx, batchIds.toDF("doc_id"))
     assert(screen() == v1)
-    Vectors.compactIndex(spark, idx, Seq("fps"))
+    Index.Afp.compact(spark, idx)
     assert(spark.read.parquet(s"$idx/fps").count() == rows0)
-    assert(Vectors.tombstonesOf(spark, idx).isEmpty)
+    assert(Index.tombstonesOf(spark, idx).isEmpty)
     assert(screen() == v1)
   }
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Vectors
+import graft.operators.{Index, Vectors}
 import graft.sources.{SeisFixture, SeisPipeline}
 
 /** The serving reads of graft's own layouts build their DataFrame without
@@ -111,9 +111,9 @@ class ConstructJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("IVF query after a delete: declared tombstone schema, zero construction jobs") {
     import spark.implicits._
     val ivf = tmp("cj_ivf_del")
-    Vectors.writeIvfIndex(spark, d, ivf)
-    Vectors.deleteFromIndex(spark, ivf, Seq(1L).toDF("doc_id"))
-    assertDeclared(Vectors.TombstoneSchema, s"$ivf/_tombstones")
+    Index.Ivf.build(spark, d, ivf)
+    Index.delete(spark, ivf, Seq(1L).toDF("doc_id"))
+    assertDeclared(Index.TombstoneSchema, s"$ivf/_tombstones")
     val probe = Tables.embeddings(spark, d).where(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).as[Array[Double]].head()
     Vectors.queryIvfIndex(spark, ivf, probe).collect() // warm
@@ -127,9 +127,9 @@ class ConstructJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivf = tmp("cj_ivf")
     val pq = tmp("cj_pq")
     val ipq = tmp("cj_ipq")
-    Vectors.writeIvfIndex(spark, d, ivf)
-    Vectors.writePqIndex(spark, d, pq)
-    Vectors.writeIvfPqIndex(spark, d, ipq)
+    Index.Ivf.build(spark, d, ivf)
+    Index.Pq.build(spark, d, pq)
+    Index.IvfPq.build(spark, d, ipq)
     assertDeclared(Vectors.IvfSchema, ivf)
     assertDeclared(Vectors.PqCodesSchema, s"$pq/codes")
     assertDeclared(Vectors.IvfPqSchema, ipq)

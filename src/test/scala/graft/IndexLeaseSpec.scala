@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{IndexLease, Vectors}
+import graft.operators.{Encoded, Index, IndexCodec, IndexKind, IndexLease}
 
 /** Cross-process/-thread mutual exclusion of index mutation (r12 verdict
   * #2): racing appends serialize on the lease and the final index equals a
@@ -22,8 +22,8 @@ class IndexLeaseSpec extends AnyFunSuite {
     val d = TestSpark.sf0001
     val raced = tmpDir("lease_race")
     val serial = tmpDir("lease_serial")
-    Vectors.writeMinhashIndex(spark, d, raced)
-    Vectors.writeMinhashIndex(spark, d, serial)
+    Index.Minhash.build(spark, d, raced)
+    Index.Minhash.build(spark, d, serial)
     def batch(ids: Range): org.apache.spark.sql.DataFrame =
       ids.map(i => (1000000L + i, s"racing batch doc $i with words $i ${i * 7}"))
         .toDF("doc_id", "text")
@@ -31,11 +31,11 @@ class IndexLeaseSpec extends AnyFunSuite {
     val b2 = batch(100 until 120)
     // race the two appends from two threads — without the lease, concurrent
     // jobs writing one path stomp each other's _temporary committer staging
-    val t1 = new Thread(() => Vectors.appendMinhashIndex(spark, raced, b1))
-    val t2 = new Thread(() => Vectors.appendMinhashIndex(spark, raced, b2))
+    val t1 = new Thread(() => Index.Minhash.append(spark, raced, b1))
+    val t2 = new Thread(() => Index.Minhash.append(spark, raced, b2))
     t1.start(); t2.start(); t1.join(120000); t2.join(120000)
-    Vectors.appendMinhashIndex(spark, serial, b1)
-    Vectors.appendMinhashIndex(spark, serial, b2)
+    Index.Minhash.append(spark, serial, b1)
+    Index.Minhash.append(spark, serial, b2)
     def sigSet(dir: String): Set[Seq[Any]] =
       spark.read.parquet(s"$dir/sigs")
         .select(col("doc_id"), col("sig"))
@@ -83,24 +83,26 @@ class IndexLeaseSpec extends AnyFunSuite {
     import spark.implicits._
     val d = TestSpark.sf0001
     var builds = 0
-    def build(p: String): Unit = {
-      builds += 1
-      Seq((1L, "x")).toDF("id", "v").write.parquet(p)
-    }
     // unique kind per run: the warehouse survives across test JVMs, and a
     // leftover committed index of the same vintage would be ADOPTED by the
     // very first call (the feature under test, one JVM too early)
-    val kind = s"adopt_t_${System.nanoTime()}"
-    val p1 = Vectors.ensureIndex(spark, kind, d)(build)
+    val kind = new IndexKind(s"adopt_t_${System.nanoTime()}", "documents.parquet",
+        Nil, IndexCodec.pure((_, _) => Encoded(Nil))) {
+      override def build(s: org.apache.spark.sql.SparkSession, d: String, p: String): Unit = {
+        builds += 1
+        Seq((1L, "x")).toDF("id", "v").write.parquet(p)
+      }
+    }
+    val p1 = Index.ensure(spark, kind, d)
     assert(builds == 1)
-    Vectors.ensureIndex(spark, kind, d)(build) // same session: memo hit
+    Index.ensure(spark, kind, d) // same session: memo hit
     assert(builds == 1)
     assert(new java.io.File(p1, "_fp").exists(), "vintage sidecar committed")
     // a FRESH session (new memo identity) adopts the committed vintage via
     // the _fp sidecar instead of rebuilding — the cross-session serving
     // story: one build per corpus vintage, not per session
     val s2 = spark.newSession()
-    val p2 = Vectors.ensureIndex(s2, kind, d)(build)
+    val p2 = Index.ensure(s2, kind, d)
     assert(p2 == p1)
     assert(builds == 1, "adoption must not rebuild")
   }
@@ -147,7 +149,7 @@ class IndexLeaseSpec extends AnyFunSuite {
         }
       } catch { case t: Throwable => readerFailure.set(t) })
     reader.start()
-    // writer: loop the EXACT ensureIndex commit sequence — build a staging
+    // writer: loop the EXACT Index.ensure commit sequence — build a staging
     // sibling, move the live target aside, rename the staging in, delete
     // the old — the two-rename window the retry contract exists for
     try {

@@ -6,7 +6,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Multimodal
+import graft.operators.{Index, Multimodal}
 
 /** The real-codec multimodal path: the hand-written BMP encoder must
   * round-trip through the JDK's ImageIO decoder pixel-for-pixel (that
@@ -165,25 +165,25 @@ class MultimodalSpec extends AnyFunSuite {
       .where(col("source") === Vectors.MinhashBatchSource)
     val batchIds = batch.select("doc_id").as[Long].collect().toSeq
     val idx = java.nio.file.Files.createTempDirectory("dhidx").toString
-    Multimodal.writeDhashIndex(spark, d, idx)
+    Index.Dhash.build(spark, d, idx)
     val rows0 = spark.read.parquet(s"$idx/dhashes").count()
-    def screen() = Multimodal.dhashScreenOf(spark, idx, batch).collect()
+    def screen() = Index.screenByKey(Index.Dhash, spark, idx, batch).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
     val v1 = screen()
     assert(v1.size == batchIds.size)
     // append: every batch image's own hash is now at rest -> all dup,
     // best match at most its own id
-    Multimodal.appendDhashIndex(spark, idx, batch)
+    Index.Dhash.append(spark, idx, batch)
     assert(spark.read.parquet(s"$idx/dhashes").count() == rows0 + batchIds.size)
     val v2 = screen()
     assert(v2.forall { case (id, dup, ref) => dup == 1L && ref <= id })
     // delete the appended ids: original verdicts restored logically...
-    Vectors.deleteFromIndex(spark, idx, batchIds.toDF("doc_id"))
+    Index.delete(spark, idx, batchIds.toDF("doc_id"))
     assert(screen() == v1)
     // ...then physically, with tombstones cleared and layout intact
-    Vectors.compactIndex(spark, idx, Seq("dhashes"))
+    Index.Dhash.compact(spark, idx)
     assert(spark.read.parquet(s"$idx/dhashes").count() == rows0)
-    assert(Vectors.tombstonesOf(spark, idx).isEmpty)
+    assert(Index.tombstonesOf(spark, idx).isEmpty)
     assert(screen() == v1)
   }
 

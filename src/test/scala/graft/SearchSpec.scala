@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Search
+import graft.operators.{Index, Search}
 
 /** At-rest keyword serving. The BM25 arithmetic is oracle-hash-checked in
   * the driver gate; these specs pin the INDEX lifecycle: directory-level
@@ -19,7 +19,7 @@ class SearchSpec extends AnyFunSuite {
 
   test("a probe leaves nothing in the session's cache") {
     val idx = freshDir("nocache")
-    Search.writeKeywordIndex(spark, sf, idx)
+    Index.Keyword.build(spark, sf, idx)
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
     spark.catalog.clearCache()
@@ -38,7 +38,7 @@ class SearchSpec extends AnyFunSuite {
 
   test("probe prunes to the query terms' tb partitions at directory level") {
     val idx = freshDir("prune")
-    Search.writeKeywordIndex(spark, sf, idx)
+    Index.Keyword.build(spark, sf, idx)
     val nBuckets = new java.io.File(s"$idx/postings").listFiles()
       .count(_.getName.startsWith("tb="))
     val probed = Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK)
@@ -61,12 +61,12 @@ class SearchSpec extends AnyFunSuite {
   test("append path reproduces the one-shot build bit-for-bit, stats log aggregates deltas") {
     val docs = Tables.documents(spark, sf)
     val oneShot = freshDir("full")
-    Search.writeKeywordIndex(spark, sf, oneShot)
+    Index.Keyword.build(spark, sf, oneShot)
     val grown = freshDir("grown")
-    Search.appendKeywordIndex(spark, grown, docs.where(col("source") =!= "src0"))
+    Index.Keyword.append(spark, grown, docs.where(col("source") =!= "src0"))
     // pre-append probe serves the partial corpus (its own exact stats)
     val partial = Search.probeKeywordIndex(spark, grown, Search.Queries, Search.TopK).collect()
-    Search.appendKeywordIndex(spark, grown, docs.where(col("source") === "src0"))
+    Index.Keyword.append(spark, grown, docs.where(col("source") === "src0"))
     val after = Search.probeKeywordIndex(spark, grown, Search.Queries, Search.TopK)
       .collect().map(_.toSeq).toSeq
     val full = Search.probeKeywordIndex(spark, oneShot, Search.Queries, Search.TopK)
@@ -88,11 +88,11 @@ class SearchSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Tables.documents(spark, sf)
     val idx = freshDir("life")
-    Search.writeKeywordIndex(spark, sf, idx)
+    Index.Keyword.build(spark, sf, idx)
     val before = Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK).collect()
     val victim = before.head.getLong(2) // query 0's top hit
     val victimDf = Seq(victim).toDF("doc_id")
-    operators.Vectors.deleteFromIndex(spark, idx, victimDf)
+    operators.Index.delete(spark, idx, victimDf)
     val after = Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK).collect()
     assert(!after.exists(_.getLong(2) == victim), "tombstoned doc still ranks")
     assert(after.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L),
@@ -100,9 +100,9 @@ class SearchSpec extends AnyFunSuite {
     // physical compaction: postings rewritten without the victim, stats
     // log rebuilt — from here the index must be BIT-IDENTICAL to a fresh
     // build over the surviving corpus
-    Search.compactKeywordIndex(spark, idx)
+    Index.Keyword.compact(spark, idx)
     val cleanIdx = freshDir("clean")
-    Search.appendKeywordIndex(spark, cleanIdx,
+    Index.Keyword.append(spark, cleanIdx,
       docs.where(col("doc_id") =!= victim))
     val compacted = Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK)
       .collect().map(_.toSeq).toSeq
@@ -111,7 +111,7 @@ class SearchSpec extends AnyFunSuite {
     assert(compacted == clean, "compacted index diverges from a fresh victim-free build")
     assert(spark.read.parquet(s"$idx/postings")
       .where(col("doc_id") === victim).count() == 0, "victim rows survived compaction")
-    assert(operators.Vectors.tombstonesOf(spark, idx).isEmpty, "tombstones not cleared")
+    assert(operators.Index.tombstonesOf(spark, idx).isEmpty, "tombstones not cleared")
     val st = spark.read.parquet(s"$idx/_statslog").collect()
     assert(st.length == 1 && st.head.getLong(0) == docs.count() - 1)
   }
@@ -180,8 +180,7 @@ class SearchSpec extends AnyFunSuite {
         .sortBy { case (id, c) => (-c, id) }
         .take(Search.SemTopN).map(_._1).toSeq
     }.toMap
-    val idxIvf = operators.Vectors.ensureIndex(spark, "ivf", sf)(
-      p => operators.Vectors.writeIvfIndex(spark, sf, p))
+    val idxIvf = operators.Index.ensure(spark, operators.Index.Ivf, sf)
     val recalls = Search.HybridProbes.map { pid =>
       val retrieved = operators.Vectors.queryIvfIndex(spark, idxIvf, byId(pid),
           topK = Search.SemTopN + Search.SemSlack, nProbe = 4, excludeId = Some(pid))
@@ -329,7 +328,7 @@ class SearchSpec extends AnyFunSuite {
   test("impact probe: exhaustive prefix is bit-equal to the exact probe, " +
       "df comes from the sidecar") {
     val idx = freshDir("impact_full")
-    Search.writeKeywordIndex(spark, sf, idx)
+    Index.Keyword.build(spark, sf, idx)
     val exact = Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK)
       .collect().map(_.toSeq).toSeq
     // fixture df << ImpactTailBand * ImpactBlockRows — every champion
@@ -355,7 +354,7 @@ class SearchSpec extends AnyFunSuite {
       "read, overlap floor vs the exact top-k") {
     val idx = freshDir("impact_small")
     // tiny blocks so the champion prefix actually bites at fixture scale
-    Search.appendKeywordIndex(spark, idx, Tables.documents(spark, sf), blockRows = 4)
+    Index.keyword(blockRows = 4).append(spark, idx, Tables.documents(spark, sf))
     val blocks = 2
     val imp = Search.probeKeywordIndexImpact(spark, idx, Search.Queries,
       Search.TopK, blocks = blocks)
@@ -429,7 +428,7 @@ class SearchSpec extends AnyFunSuite {
   test("factored probe: bit-equal to the exact probe, scoring scan is " +
       "family-level, winners expand through fams/ point reads") {
     val idx = freshDir("factored")
-    Search.writeKeywordIndex(spark, sf, idx)
+    Index.Keyword.build(spark, sf, idx)
     val exact = Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK)
       .collect().map(_.toSeq).toSeq
     val fac = Search.probeKeywordIndexFactored(spark, idx, Search.Queries, Search.TopK)
@@ -447,10 +446,10 @@ class SearchSpec extends AnyFunSuite {
       "path; compaction restores the fast path bit-for-bit") {
     import spark.implicits._
     val idx = freshDir("factored_life")
-    Search.writeKeywordIndex(spark, sf, idx)
+    Index.Keyword.build(spark, sf, idx)
     val victim = Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK)
       .collect().head.getLong(2)
-    operators.Vectors.deleteFromIndex(spark, idx, Seq(victim).toDF("doc_id"))
+    operators.Index.delete(spark, idx, Seq(victim).toDF("doc_id"))
     // live tombstones: the factored probe must serve the doc-level exact
     // path (family uniformity is broken mid-family)
     val during = Search.probeKeywordIndexFactored(spark, idx, Search.Queries, Search.TopK)
@@ -461,7 +460,7 @@ class SearchSpec extends AnyFunSuite {
     assert(!during.exists(_(2) == victim), "tombstoned doc still ranks")
     // compaction rebuilds fpostings/fams from the surviving postings —
     // the fast path returns and still matches the exact probe
-    Search.compactKeywordIndex(spark, idx)
+    Index.Keyword.compact(spark, idx)
     val after = Search.probeKeywordIndexFactored(spark, idx, Search.Queries, Search.TopK)
       .collect().map(_.toSeq).toSeq
     val exactAfter = Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK)
@@ -492,11 +491,11 @@ class SearchSpec extends AnyFunSuite {
   test("compaction rebuilds the block directory without statistical residue") {
     import spark.implicits._
     val idx = freshDir("impact_compact")
-    Search.writeKeywordIndex(spark, sf, idx)
+    Index.Keyword.build(spark, sf, idx)
     val victim = Search.probeKeywordIndex(spark, idx, Search.Queries, Search.TopK)
       .collect().head.getLong(2)
-    operators.Vectors.deleteFromIndex(spark, idx, Seq(victim).toDF("doc_id"))
-    Search.compactKeywordIndex(spark, idx)
+    operators.Index.delete(spark, idx, Seq(victim).toDF("doc_id"))
+    Index.Keyword.compact(spark, idx)
     val bd = spark.read.parquet(s"$idx/_blockdir")
       .groupBy(col("term")).agg(sum(col("n")).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

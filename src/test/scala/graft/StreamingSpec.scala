@@ -445,8 +445,7 @@ class StreamingSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     // the memoized at-rest index dir the stream screens resolve internally
-    val idx = operators.Vectors.ensureIndex(spark, "minhash", TestSpark.sf0001)(
-      p => operators.Vectors.writeMinhashIndex(spark, TestSpark.sf0001, p))
+    val idx = operators.Index.ensure(spark, operators.Index.Minhash, TestSpark.sf0001)
     def run(ceiling: Long, name: String, mode: String) = Streams.runToCompletion(
       Streams.minhashScreenStream(spark, TestSpark.sf0001,
         maxBroadcastRefs = ceiling).toDF(), name, mode)
@@ -457,7 +456,7 @@ class StreamingSpec extends AnyFunSuite {
       .collectFirst { case (_, 1L, ref) => ref }
     assume(victim.nonEmpty, "fixture has no at-rest dup to delete")
     try {
-      operators.Vectors.deleteFromIndex(spark, idx, Seq(victim.get).toDF("doc_id"))
+      operators.Index.delete(spark, idx, Seq(victim.get).toDF("doc_id"))
       val afterBc = run(Long.MaxValue, "t_mh_ts_bc", "append")
       assert(afterBc.forall(_._3 != victim.get),
         "broadcast path matched a tombstoned doc")
@@ -672,7 +671,7 @@ class StreamingSpec extends AnyFunSuite {
     // overwrite must leave the index byte-identical, not doubled.
     val docs = Tables.documents(spark, TestSpark.sf0001)
       .select(c("doc_id"), c("text"))
-    Streams.ingestMinhashBatch(spark, idx, docs, 0L)
+    operators.Index.Minhash.ingest(spark, idx, docs, 0L)
     assert(state() == once, "micro-batch replay changed index state")
 
     // 3) restart against the same checkpoint: committed batches re-emit

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
-import graft.operators.Vectors
+import graft.operators.{Encoded, Index, IndexCodec, IndexKind, Vectors}
 
 class VectorSpec extends AnyFunSuite {
 
@@ -93,7 +93,7 @@ class VectorSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val idx = java.nio.file.Files.createTempDirectory("pqidx").toString
-    Vectors.writePqIndex(spark, TestSpark.sf0001, idx)
+    Index.Pq.build(spark, TestSpark.sf0001, idx)
     // codes are M bytes per vector — the 32x-compressed scan body
     val codes = spark.read.parquet(s"$idx/codes")
     assert(codes.count() == Tables.embeddings(spark, TestSpark.sf0001).count())
@@ -145,7 +145,7 @@ class VectorSpec extends AnyFunSuite {
       (i.toLong, v.map(_.toFloat))
     }.toDF("vec_id", "embedding").write.parquet(s"$d/embeddings.parquet")
     val idx = java.nio.file.Files.createTempDirectory("pqsemiidx").toString
-    Vectors.writePqIndex(spark, d, idx)
+    Index.Pq.build(spark, d, idx)
     val probe = Tables.embeddings(spark, d).where(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).as[Array[Double]].head()
     // exhaustive candidates (cand = n > 1000) → the semi-join branch; with
@@ -169,19 +169,26 @@ class VectorSpec extends AnyFunSuite {
   test("ensureIndex commit protocol: staged build, rename commit, stale vintage replaced, no residue") {
     val spark = TestSpark.spark
     val d = TestSpark.sf0001
-    val kind = "guard" + (System.nanoTime() % 1000000)
+    val kindName = "guard" + (System.nanoTime() % 1000000)
     val expected = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") +
-      s"/graft_index/${kind}_" + d.replaceAll("[^A-Za-z0-9._-]", "_")
+      s"/graft_index/${kindName}_" + d.replaceAll("[^A-Za-z0-9._-]", "_")
     // plant a stale vintage at the committed path (an earlier process)
     new java.io.File(expected).mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(expected, "stale.txt"), "old")
-    val got = Vectors.ensureIndex(spark, kind, d) { p =>
-      // the build lands in a PRIVATE staging sibling, never the target
-      assert(p.contains("__build_"), p)
-      new java.io.File(p).mkdirs()
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p, "fresh.txt"), "new")
+    var rebuilt = false
+    val kind = new IndexKind(kindName, "documents.parquet", Nil,
+        IndexCodec.pure((_, _) => Encoded(Nil))) {
+      override def build(s: org.apache.spark.sql.SparkSession, d: String, p: String): Unit = {
+        if (rebuilt) fail("memoized index rebuilt")
+        rebuilt = true
+        // the build lands in a PRIVATE staging sibling, never the target
+        assert(p.contains("__build_"), p)
+        new java.io.File(p).mkdirs()
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(p, "fresh.txt"), "new")
+      }
     }
+    val got = Index.ensure(spark, kind, d)
     assert(got == expected)
     assert(new java.io.File(got, "fresh.txt").exists, "committed build missing")
     assert(!new java.io.File(got, "stale.txt").exists, "stale vintage survived")
@@ -191,8 +198,7 @@ class VectorSpec extends AnyFunSuite {
       .filter(_.startsWith(name + "__"))
     assert(residue.isEmpty, residue.mkString(","))
     // the session memo holds: a second ensure must NOT rebuild
-    val got2 = Vectors.ensureIndex(spark, kind, d)(_ =>
-      fail("memoized index rebuilt"))
+    val got2 = Index.ensure(spark, kind, d)
     assert(got2 == got)
   }
 
@@ -268,7 +274,7 @@ class VectorSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val idx = java.nio.file.Files.createTempDirectory("ivfpqidx").toString
-    Vectors.writeIvfPqIndex(spark, TestSpark.sf0001, idx)
+    Index.IvfPq.build(spark, TestSpark.sf0001, idx)
     val codes = spark.read.parquet(idx)
     assert(codes.count() == Tables.embeddings(spark, TestSpark.sf0001).count())
     assert(codes.select(org.apache.spark.sql.functions.octet_length(col("codes")))
@@ -345,10 +351,10 @@ class VectorSpec extends AnyFunSuite {
     val nBatch = batch.count()
     // minhash: build at-rest, screen, append the batch, re-screen
     val mIdx = java.nio.file.Files.createTempDirectory("mhidx").toString
-    Vectors.writeMinhashIndex(spark, d, mIdx)
+    Index.Minhash.build(spark, d, mIdx)
     val before = spark.read.parquet(s"$mIdx/sigs").count()
     val v1 = Vectors.minhashScreenOf(spark, mIdx, batch).collect()
-    Vectors.appendMinhashIndex(spark, mIdx, batch)
+    Index.Minhash.append(spark, mIdx, batch)
     // partition-append grew the layout by exactly the batch (no rebuild)
     assert(spark.read.parquet(s"$mIdx/sigs").count() == before + nBatch)
     assert(spark.read.parquet(s"$mIdx/banded").count() ==
@@ -361,8 +367,8 @@ class VectorSpec extends AnyFunSuite {
     assert(dup1.subsetOf(v2.map(_.getLong(0)).toSet))
     // simhash twin: append then re-screen -> all-dup at Hamming 0
     val sIdx = java.nio.file.Files.createTempDirectory("shidx").toString
-    Vectors.writeSimhashIndex(spark, d, sIdx)
-    Vectors.appendSimhashIndex(spark, sIdx, batch)
+    Index.Simhash.build(spark, d, sIdx)
+    Index.Simhash.append(spark, sIdx, batch)
     val s2 = Vectors.simhashScreenOf(spark, sIdx, batch).collect()
     assert(s2.length == nBatch &&
       s2.forall(r => r.getLong(1) == 1L && r.getLong(3) == 0L))
@@ -383,52 +389,52 @@ class VectorSpec extends AnyFunSuite {
     // delete(batch ids) must RESTORE the original screen verdicts, first
     // logically (tombstones only), then physically (after compaction)
     val mIdx = java.nio.file.Files.createTempDirectory("mhdel").toString
-    Vectors.writeMinhashIndex(spark, d, mIdx)
+    Index.Minhash.build(spark, d, mIdx)
     val rows0 = spark.read.parquet(s"$mIdx/sigs").count()
     val v1 = verdicts(Vectors.minhashScreenOf(spark, mIdx, batch).collect())
-    Vectors.appendMinhashIndex(spark, mIdx, batch)
+    Index.Minhash.append(spark, mIdx, batch)
     assert(verdicts(Vectors.minhashScreenOf(spark, mIdx, batch).collect())
       .forall(r => r._2 == 1L && r._4 == 32L)) // appended: all self-dup
-    Vectors.deleteFromIndex(spark, mIdx, batchIds.toDF("doc_id"))
+    Index.delete(spark, mIdx, batchIds.toDF("doc_id"))
     // logical delete: original verdicts restored, physical rows untouched
     assert(verdicts(Vectors.minhashScreenOf(spark, mIdx, batch).collect()) == v1)
     assert(spark.read.parquet(s"$mIdx/sigs").count() == rows0 + batchIds.size)
     // idempotent re-delete
-    Vectors.deleteFromIndex(spark, mIdx, batchIds.toDF("doc_id"))
+    Index.delete(spark, mIdx, batchIds.toDF("doc_id"))
     assert(verdicts(Vectors.minhashScreenOf(spark, mIdx, batch).collect()) == v1)
     // physical compaction: victim rows gone, tombstones cleared,
     // partition layout intact, verdicts still the original
-    Vectors.compactMinhashIndex(spark, mIdx)
+    Index.Minhash.compact(spark, mIdx)
     val sigsAfter = spark.read.parquet(s"$mIdx/sigs")
     assert(sigsAfter.count() == rows0)
     assert(sigsAfter.where(col("doc_id").isin(batchIds: _*)).isEmpty)
     val banded = spark.read.parquet(s"$mIdx/banded")
     assert(banded.where(col("doc_id").isin(batchIds: _*)).isEmpty)
     assert(banded.select("band").distinct().count() == 8)
-    assert(Vectors.tombstonesOf(spark, mIdx).isEmpty)
+    assert(Index.tombstonesOf(spark, mIdx).isEmpty)
     assert(verdicts(Vectors.minhashScreenOf(spark, mIdx, batch).collect()) == v1)
     // compact with no tombstones is a no-op; append after compact composes
-    Vectors.compactMinhashIndex(spark, mIdx)
+    Index.Minhash.compact(spark, mIdx)
     assert(spark.read.parquet(s"$mIdx/sigs").count() == rows0)
-    Vectors.appendMinhashIndex(spark, mIdx, batch)
+    Index.Minhash.append(spark, mIdx, batch)
     assert(verdicts(Vectors.minhashScreenOf(spark, mIdx, batch).collect())
       .forall(r => r._2 == 1L && r._4 == 32L))
 
     // simhash twin: same restore invariant through delete and compact
     val sIdx = java.nio.file.Files.createTempDirectory("shdel").toString
-    Vectors.writeSimhashIndex(spark, d, sIdx)
+    Index.Simhash.build(spark, d, sIdx)
     val blocks0 = spark.read.parquet(s"$sIdx/blocks").count()
     val s1 = verdicts(Vectors.simhashScreenOf(spark, sIdx, batch).collect())
-    Vectors.appendSimhashIndex(spark, sIdx, batch)
+    Index.Simhash.append(spark, sIdx, batch)
     assert(verdicts(Vectors.simhashScreenOf(spark, sIdx, batch).collect())
       .forall(r => r._2 == 1L && r._4 == 0L))
-    Vectors.deleteFromIndex(spark, sIdx, batchIds.toDF("doc_id"))
+    Index.delete(spark, sIdx, batchIds.toDF("doc_id"))
     assert(verdicts(Vectors.simhashScreenOf(spark, sIdx, batch).collect()) == s1)
-    Vectors.compactSimhashIndex(spark, sIdx)
+    Index.Simhash.compact(spark, sIdx)
     assert(spark.read.parquet(s"$sIdx/blocks").count() == blocks0)
     assert(spark.read.parquet(s"$sIdx/blocks")
       .where(col("ref_id").isin(batchIds: _*)).isEmpty)
-    assert(Vectors.tombstonesOf(spark, sIdx).isEmpty)
+    assert(Index.tombstonesOf(spark, sIdx).isEmpty)
     assert(verdicts(Vectors.simhashScreenOf(spark, sIdx, batch).collect()) == s1)
   }
 
@@ -440,12 +446,12 @@ class VectorSpec extends AnyFunSuite {
     // build the full index, then append a DISJOINT synthetic id range
     // (every fixture vector re-shifted by 1e6) and assert the codebook was
     // NOT retrained, assignments did not drift, and queries see the rows
-    Vectors.writeIvfIndex(spark, d, idx)
+    Index.Ivf.build(spark, d, idx)
     val cbBefore = spark.read.parquet(s"$idx/_codebook").collect().map(_.toSeq).toSet
     val nBefore = spark.read.parquet(idx).count()
     val appended = Tables.embeddings(spark, d)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    Vectors.appendIvfIndex(spark, idx, appended)
+    Index.Ivf.append(spark, idx, appended)
     assert(spark.read.parquet(s"$idx/_codebook").collect().map(_.toSeq).toSet == cbBefore)
     assert(spark.read.parquet(idx).count() == nBefore * 2)
     // every appended vector landed in the SAME cell as its original (the
@@ -476,10 +482,10 @@ class VectorSpec extends AnyFunSuite {
 
     // IVF (root-partitioned layout): delete the top hit, re-query, compact
     val ivf = java.nio.file.Files.createTempDirectory("ivfdel").toString
-    Vectors.writeIvfIndex(spark, d, ivf)
+    Index.Ivf.build(spark, d, ivf)
     val t1 = ids(Vectors.queryIvfIndex(spark, ivf, probe, topK = 5))
     val victim = t1.head
-    Vectors.deleteFromIndex(spark, ivf, Seq(victim).toDF("doc_id"))
+    Index.delete(spark, ivf, Seq(victim).toDF("doc_id"))
     val t2 = ids(Vectors.queryIvfIndex(spark, ivf, probe, topK = 5))
     // the survivors keep their relative order; rank 5 backfills
     assert(!t2.contains(victim) &&
@@ -487,35 +493,35 @@ class VectorSpec extends AnyFunSuite {
       s"post-delete ranking drifted: $t1 -> $t2")
     val cbBefore = spark.read.parquet(s"$ivf/_codebook").count()
     val rowsBefore = spark.read.parquet(ivf).count()
-    Vectors.compactIvfIndex(spark, ivf)
+    Index.Ivf.compact(spark, ivf)
     assert(spark.read.parquet(ivf).count() == rowsBefore - 1)
     assert(spark.read.parquet(ivf).where(col("vec_id") === victim).isEmpty)
     assert(spark.read.parquet(s"$ivf/_codebook").count() == cbBefore)
-    assert(Vectors.tombstonesOf(spark, ivf).isEmpty)
+    assert(Index.tombstonesOf(spark, ivf).isEmpty)
     assert(ids(Vectors.queryIvfIndex(spark, ivf, probe, topK = 5)) == t2)
 
     // PQ (flat codes/ subdir): same contract through compactPqIndex
     val pq = java.nio.file.Files.createTempDirectory("pqdel").toString
-    Vectors.writePqIndex(spark, d, pq)
+    Index.Pq.build(spark, d, pq)
     val p1 = ids(Vectors.queryPqIndex(spark, d, pq, probe, topK = 5))
     val pVictim = p1.head
-    Vectors.deleteFromIndex(spark, pq, Seq(pVictim).toDF("doc_id"))
+    Index.delete(spark, pq, Seq(pVictim).toDF("doc_id"))
     val p2 = ids(Vectors.queryPqIndex(spark, d, pq, probe, topK = 5))
     assert(!p2.contains(pVictim))
-    Vectors.compactPqIndex(spark, pq)
+    Index.Pq.compact(spark, pq)
     assert(spark.read.parquet(s"$pq/codes")
       .where(col("vec_id") === pVictim).isEmpty)
-    assert(Vectors.tombstonesOf(spark, pq).isEmpty)
+    assert(Index.tombstonesOf(spark, pq).isEmpty)
     assert(ids(Vectors.queryPqIndex(spark, d, pq, probe, topK = 5)) == p2)
 
     // IVFADC (root-partitioned codes): logical delete on the third path
     val ipq = java.nio.file.Files.createTempDirectory("ipqdel").toString
-    Vectors.writeIvfPqIndex(spark, d, ipq)
+    Index.IvfPq.build(spark, d, ipq)
     val q1 = ids(Vectors.queryIvfPqIndex(spark, d, ipq, probe, topK = 5))
-    Vectors.deleteFromIndex(spark, ipq, Seq(q1.head).toDF("doc_id"))
+    Index.delete(spark, ipq, Seq(q1.head).toDF("doc_id"))
     val q2 = ids(Vectors.queryIvfPqIndex(spark, d, ipq, probe, topK = 5))
     assert(!q2.contains(q1.head))
-    Vectors.compactIvfIndex(spark, ipq)
+    Index.IvfPq.compact(spark, ipq)
     assert(spark.read.parquet(ipq).where(col("vec_id") === q1.head).isEmpty)
     assert(spark.read.parquet(s"$ipq/_pq_codebook").count() > 0)
     assert(ids(Vectors.queryIvfPqIndex(spark, d, ipq, probe, topK = 5)) == q2)
@@ -622,7 +628,7 @@ class VectorSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val idx = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    Vectors.writeIvfIndex(spark, TestSpark.sf0001, idx, k = 16)
+    Index.Ivf.build(spark, TestSpark.sf0001, idx)
     val probe = Tables.embeddings(spark, TestSpark.sf0001)
       .where(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).as[Array[Double]].head()
@@ -809,7 +815,7 @@ class VectorSpec extends AnyFunSuite {
     import spark.implicits._
     val d = TestSpark.sf0001
     val idx = java.nio.file.Files.createTempDirectory("ivf_fixed").toString
-    Vectors.writeIvfFixedIndex(spark, d, idx)
+    Index.IvfFixed.build(spark, d, idx)
     val probe = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .where(col("vec_id") === 0).select(col("v"))
@@ -849,7 +855,7 @@ class VectorSpec extends AnyFunSuite {
     import spark.implicits._
     val d = TestSpark.sf0001
     val idx = java.nio.file.Files.createTempDirectory("pq_fixed").toString
-    Vectors.writePqFixedIndex(spark, d, idx)
+    Index.PqFixed.build(spark, d, idx)
     val probe = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .where(col("vec_id") === 0).select(col("v"))

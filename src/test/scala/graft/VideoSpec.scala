@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Multimodal, Video}
+import graft.operators.{Index, Multimodal, Video}
 
 /** The video leg of the multimodal story: the GVID container must demux
   * byte-for-byte, every frame must survive the REAL ImageIO round trip
@@ -178,20 +178,20 @@ class VideoSpec extends AnyFunSuite {
       .where(col("source") === Vectors.MinhashBatchSource)
     val batchIds = batch.select("doc_id").as[Long].collect().toSeq
     val idx = java.nio.file.Files.createTempDirectory("vsigidx").toString
-    Video.writeVsigIndex(spark, d, idx)
+    Index.Vsig.build(spark, d, idx)
     val rows0 = spark.read.parquet(s"$idx/vsigs").count()
-    def screen() = Video.vsigScreenOf(spark, idx, batch).collect()
+    def screen() = Index.screenByKey(Index.Vsig, spark, idx, batch).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
     val v1 = screen()
     assert(v1.size == batchIds.size)
-    Video.appendVsigIndex(spark, idx, batch)
+    Index.Vsig.append(spark, idx, batch)
     val v2 = screen()
     assert(v2.forall { case (id, dup, ref) => dup == 1L && ref <= id })
-    Vectors.deleteFromIndex(spark, idx, batchIds.toDF("doc_id"))
+    Index.delete(spark, idx, batchIds.toDF("doc_id"))
     assert(screen() == v1)
-    Vectors.compactIndex(spark, idx, Seq("vsigs"))
+    Index.Vsig.compact(spark, idx)
     assert(spark.read.parquet(s"$idx/vsigs").count() == rows0)
-    assert(Vectors.tombstonesOf(spark, idx).isEmpty)
+    assert(Index.tombstonesOf(spark, idx).isEmpty)
     assert(screen() == v1)
   }
 
